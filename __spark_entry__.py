@@ -19,48 +19,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from postbound_spark.queries import load_all  # noqa: E402 — needs the path above
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (SURVEY.md §7 M0) on /root/testdata/sf0.001."""
-    from postbound_spark.queries import load_all
-
     return load_all()["flagship_regional_revenue"].builder(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator/query from SURVEY.md §2.
 
-    Each builder is wrapped to release the PREVIOUS query's pipeline stage
-    caches first: the driver runs ~140 queries sequentially in one
-    session, and without the per-query release (the same lifecycle
-    bench.py and the pytest harness apply) every pipeline query's
-    persist()ed token/shingle/signature stages would stay pinned for the
-    whole run — an executor-memory leak at exactly the moment
-    correctness is being judged."""
-    from postbound_spark.queries import load_all
-    from postbound_spark.queries.pipeline import release_stage_caches
-
-    last_query = {"name": None}
-
-    def wrapped(name: str, builder):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # release only when the QUERY changes: repeated reps of the
-            # same query must keep their warm stage caches (the lifecycle
-            # bench.py uses — release between queries, never between reps)
-            if last_query["name"] != name:
-                release_stage_caches()
-                last_query["name"] = name
-            return builder(spark, sf_dir)
-
-        return run
-
-    return {name: wrapped(name, qdef.builder) for name, qdef in load_all().items()}
+    The registry's builders own the per-query cache lifecycle: building a
+    different query than the last one first releases the previous query's
+    pipeline stage caches, and repetitions of one query keep them warm. So
+    the ~140 queries the driver runs in one session never pin every
+    pipeline query's persist()ed stages at once."""
+    return {name: qdef.builder for name, qdef in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query (omitted → rows-only check)."""
-    from postbound_spark.queries import load_all
-
     return {
         name: qdef.oracle for name, qdef in load_all().items() if qdef.oracle is not None
     }

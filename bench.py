@@ -71,9 +71,9 @@ def main() -> None:
     # task, so min-of-reps is the reproducible number (the reference's
     # repetition model, bench.py:1043, exists for the same reason). The
     # per-query spread (max/min across reps) is reported alongside so a
-    # reader can tell a real regression from a noisy window.
-    from postbound_spark.queries.pipeline import release_stage_caches
-
+    # reader can tell a real regression from a noisy window. The registry
+    # builders release the previous query's stage caches themselves; the
+    # warm runs of one query share them.
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in names:
@@ -85,10 +85,6 @@ def main() -> None:
             reps.append(time.perf_counter() - start)
         timings[name] = round(min(reps), 3)
         spreads[name] = round(max(reps) / min(reps), 2)
-        # warm runs of one query share its stage caches; between queries the
-        # storage memory goes back (a permanently pinned cache is an
-        # executor-memory leak at scale)
-        release_stage_caches()
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

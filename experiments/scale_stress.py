@@ -214,8 +214,6 @@ def build_scaled_dir(spark, src: str, factor: int) -> str:
 
 
 def time_queries(spark, registry, sf_dir: str, names: list[str], reps: int) -> dict[str, float]:
-    from postbound_spark.queries.pipeline import release_stage_caches
-
     out = {}
     for name in names:
         registry[name].builder(spark, sf_dir).collect()  # warm
@@ -225,7 +223,6 @@ def time_queries(spark, registry, sf_dir: str, names: list[str], reps: int) -> d
             registry[name].builder(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
         out[name] = round(min(samples), 3)
-        release_stage_caches()
     return out
 
 

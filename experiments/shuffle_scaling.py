@@ -77,14 +77,11 @@ def _metrics_since(spark, last_id: int) -> dict[str, int]:
 
 
 def measure(spark, registry, sf_dir: str, names: list[str]) -> dict[str, dict]:
-    from postbound_spark.queries.pipeline import release_stage_caches
-
     out: dict[str, dict] = {}
     for name in names:
         before = _max_stage_id(spark)
         registry[name].builder(spark, sf_dir).collect()
         out[name] = _metrics_since(spark, before)
-        release_stage_caches()
     return out
 
 

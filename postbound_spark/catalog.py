@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import os
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,54 +86,54 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     )
 
 
-#: sessions that currently carry a table cache (weak registry — holds no
-#: strong reference, exists only so clear_table_cache(None) can reach them)
-_CACHED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-#: attribute under which the memo lives ON the session object itself.
+#: attribute under which the session memo lives ON the session object.
+#: It holds everything derived from the fixture data, keyed by a leading
+#: tag: table handles (``"table"``) and the measured cardinalities and
+#: join decisions of ``optimizer/selection.py`` (``"rows"``, ``"join"``).
 #: ``spark.read.parquet`` re-lists files and re-infers the footer schema on
 #: every call (~80 ms x 5 tables per query build — measured as the single
 #: largest repeated cost of the bench). A DataFrame is an immutable plan
 #: handle, so reusing it is safe; the fixtures are read-only, so the frozen
 #: file listing cannot go stale. Storing the dict on the session (rather
-#: than a module-global keyed by session) ties the cache's lifetime exactly
+#: than a module-global keyed by session) ties the memo's lifetime exactly
 #: to the session object: a cached DataFrame's own reference back to its
 #: session would keep a WeakKeyDictionary entry immortal, while the
-#: session→cache→DataFrame→session cycle here is ordinary garbage-collectable
+#: session→memo→DataFrame→session cycle here is ordinary garbage-collectable
 #: state once the caller drops the session.
-_CACHE_ATTR = "_postbound_table_cache"
+_MEMO_ATTR = "_postbound_session_memo"
 
 
-def clear_table_cache(spark: SparkSession | None = None) -> None:
-    """Drop memoized table handles (all sessions, or one) — for callers
-    that rewrite fixture files in place. Also invalidates the measured
-    build-side memos (``optimizer/selection.py``), which are keyed by
-    fixture path and would otherwise replay counts of the old data."""
-    from postbound_spark.optimizer.selection import MeasuredJoinPolicy
+def session_memo(spark: SparkSession) -> dict:
+    """The session's memo of data-derived state (created on first use)."""
+    memo = getattr(spark, _MEMO_ATTR, None)
+    if memo is None:
+        memo = {}
+        setattr(spark, _MEMO_ATTR, memo)
+    return memo
+
+
+def clear_table_cache(spark: SparkSession) -> None:
+    """Drop everything the session has derived from the fixture data — for
+    callers that rewrite fixture files in place. That is the session memo
+    (table handles, measured cardinalities, join decisions) and the
+    pipeline's stage frames, which are plans over the old tables."""
     from postbound_spark.queries.pipeline import _STAGE_FRAMES
 
-    MeasuredJoinPolicy.clear_memo()  # clears MeasuredBuildSide's memo too
-    _STAGE_FRAMES.clear()  # pipeline stage-frame memos derive from tables
-    targets = [spark] if spark is not None else list(_CACHED_SESSIONS)
-    for s in targets:
-        getattr(s, _CACHE_ATTR, {}).clear()
+    _STAGE_FRAMES.clear()
+    session_memo(spark).clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    per_session = getattr(spark, _CACHE_ATTR, None)
-    if per_session is None:
-        per_session = {}
-        setattr(spark, _CACHE_ATTR, per_session)
-        _CACHED_SESSIONS.add(spark)
-    key = (os.path.abspath(sf_dir), name)
-    df = per_session.get(key)
+    memo = session_memo(spark)
+    key = ("table", os.path.abspath(sf_dir), name)
+    df = memo.get(key)
     if df is None:
         if name == "events":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             df = normalize_event_ts(spark.read.parquet(table_path(sf_dir, name)))
         else:
             df = spark.read.parquet(table_path(sf_dir, name))
-        per_session[key] = df
+        memo[key] = df
     return df
 
 

@@ -39,6 +39,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
+from postbound_spark.catalog import session_memo
 from postbound_spark.optimizer.hints import JoinOperator, PhysicalOperatorAssignment
 
 __all__ = [
@@ -187,27 +188,26 @@ class MeasuredBuildSide:
     ``<= cap`` is the exact cardinality; one that hits ``cap + 1`` proves
     "does not fit" without counting the rest.
 
-    The memo key is caller-chosen (queries use ``name@sf_dir``), not object
-    identity, so rebuilt DataFrames across bench repetitions reuse the
-    measurement the way the reference memoizes per query fragment. Callers
-    that regenerate fixture data in place must invalidate via
-    :func:`postbound_spark.catalog.clear_table_cache` (which clears this
-    memo too) or :meth:`clear_memo`.
+    A measurement is data-derived state, so it lives as long as the data
+    handles it was taken on: in the session memo
+    (:func:`postbound_spark.catalog.session_memo`), under a caller-chosen
+    key (queries use ``name@sf_dir``), not object identity. Rebuilt
+    DataFrames across bench repetitions and queries, and every
+    ``MeasuredBuildSide`` on one session, share it the way the reference
+    memoizes per query fragment; it dies with the session. Callers that
+    regenerate fixture data in place invalidate it with
+    :func:`postbound_spark.catalog.clear_table_cache`.
     """
-
-    #: key -> ("eq", exact_rows) | ("gt", probed_cap)
-    _memo: dict[str, tuple[str, int]] = {}
 
     def __init__(self, spark: SparkSession, threshold_bytes: int | None = None):
         self._selection = StatsDrivenJoinSelection(spark, threshold_bytes)
-
-    @classmethod
-    def clear_memo(cls) -> None:
-        cls._memo.clear()
+        #: ("rows", key) -> ("eq", exact_rows) | ("gt", probed_cap)
+        self._memo = session_memo(spark)
 
     def rows_capped(self, build: DataFrame, key: str, cap: int) -> float:
         """Exact row count when it is ``<= cap``, else ``inf`` (meaning
         "provably more than cap"). Bounded work either way."""
+        key = ("rows", key)
         got = self._memo.get(key)
         if got is not None:
             kind, n = got
@@ -290,11 +290,6 @@ class MeasuredJoinPolicy:
     #: up to the column-count ratio; an estimate within this factor of the
     #: threshold may still be broadcast by the static planner
     PRUNE_MARGIN = 16
-
-    #: decision memo — repeat compilations of the same logical join skip
-    #: both the estimate probes (each forces a Catalyst optimization pass
-    #: of the subtree) and the measurement jobs entirely
-    _decisions: dict[str, str | None] = {}
 
     def __init__(self, spark: SparkSession, prefix: str,
                  threshold_bytes: int | None = None):
@@ -381,11 +376,6 @@ class MeasuredJoinPolicy:
         outside = self._root_tokens - inside
         return set(outside) or None
 
-    @classmethod
-    def clear_memo(cls) -> None:
-        cls._decisions.clear()
-        MeasuredBuildSide.clear_memo()
-
     def _key(self, subtree) -> str | None:
         """Memo key = prefix + table set + a structural fingerprint of the
         whole subtree (relalg nodes are dataclasses, so ``repr`` covers
@@ -399,14 +389,14 @@ class MeasuredJoinPolicy:
         fp = hashlib.md5(repr(subtree).encode()).hexdigest()[:12]
         return f"{self.prefix}|{'+'.join(tables)}#{fp}"
 
-    def _memo_key(self, thr: int, lkey: str, rkey: str) -> str:
+    def _memo_key(self, thr: int, lkey: str, rkey: str) -> tuple[str, str]:
         # the ROOT fingerprint is part of the decision identity: pruned
         # widths depend on what the ancestors reference, and one policy
         # prefix (e.g. native@sf) is shared by many queries — an identical
         # subtree under a narrow-projecting root must not replay the
         # decision made under a wide-projecting one. Measurement memos
         # (rows_capped) stay root-independent: row counts don't prune.
-        return f"{thr}|{self._root_fp}|{lkey}><{rkey}"
+        return ("join", f"{thr}|{self._root_fp}|{lkey}><{rkey}")
 
     def decide(self, node, left: DataFrame, right: DataFrame) -> str | None:
         """Return ``"left"``/``"right"`` to broadcast that side,
@@ -419,11 +409,16 @@ class MeasuredJoinPolicy:
         # the threshold is part of the identity: sessions/tests that resize
         # spark.sql.autoBroadcastJoinThreshold must not replay decisions
         memo_key = self._memo_key(thr, lkey, rkey) if lkey and rkey else None
-        if memo_key is not None and memo_key in self._decisions:
-            return self._decisions[memo_key]
+        # decisions share the session memo with the measurements: repeat
+        # compilations of the same logical join skip both the estimate
+        # probes (each forces a Catalyst optimization pass of the subtree)
+        # and the measurement jobs entirely
+        memo = self._measured._memo
+        if memo_key is not None and memo_key in memo:
+            return memo[memo_key]
         decision = self._decide_fresh(thr, lkey, rkey, left, right, node)
         if memo_key is not None:
-            self._decisions[memo_key] = decision
+            memo[memo_key] = decision
         return decision
 
     def _decide_fresh(

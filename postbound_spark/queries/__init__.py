@@ -103,10 +103,33 @@ def query(name: str, oracle: str | None = None, *, sum_lint_exempt: str | None =
         lint_oracle(name, oracle)
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QueryDef(name, fn, oracle)
-        return fn
+        REGISTRY[name] = QueryDef(name, _releasing(name, fn), oracle)
+        return fn  # direct calls between builders stay unwrapped
 
     return deco
+
+
+#: the registry query whose build started last (see :func:`_releasing`)
+_last_built: str | None = None
+
+
+def _releasing(name: str, fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` as the registry runs it: when a different query starts
+    building than the last one, the previous query's stage caches are
+    released first (``pipeline.release_stage_caches``). Repetitions of one
+    query keep their warm stage caches; between queries the storage memory
+    goes back, so no harness has to remember to release."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        global _last_built
+        if _last_built != name:
+            from postbound_spark.queries.pipeline import release_stage_caches
+
+            release_stage_caches()
+            _last_built = name
+        return fn(spark, sf_dir)
+
+    return build
 
 
 # The driver's CORRECTNESS harness verifies the first N (=50) registry entries

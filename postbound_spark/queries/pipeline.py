@@ -20,14 +20,20 @@ Scale design notes (each query's docstring adds specifics):
 - All hashing is md5-based and all vector math is integer-quantized so the
   DuckDB oracle reproduces results bit-for-bit (see functions/vectors.py).
 - Stage boundaries use ``persist()`` (measured equal to a repartition's
-  warm time with no shuffle), registered through :func:`stage_cache` so a
-  harness can bound cache lifetime: repeated runs of the SAME query stay
-  warm (Spark's CacheManager matches rebuilt identical plans to existing
-  entries), and :func:`release_stage_caches` between queries returns the
-  storage memory — at 100 TB a permanently pinned stage cache is an
-  executor-memory leak. ``bench.py`` and the pytest harness release per
-  query; a session that never calls release keeps the old warm-everything
-  behavior (MEMORY_AND_DISK still evicts under pressure).
+  warm time with no shuffle), registered through :func:`stage_cache`.
+  Cached state has two lifetimes, each with one owner:
+
+  - *per query*: the persisted stages and the :func:`stage_frame` plan
+    handles. The registry owns them: building a different registry query
+    than the last one first calls :func:`release_stage_caches`, which
+    returns the storage memory (at 100 TB a permanently pinned stage cache
+    is an executor-memory leak). Repeated runs of the SAME query stay warm
+    (Spark's CacheManager matches rebuilt identical plans to existing
+    entries), so no harness releases by hand;
+  - *per session*: what is derived from the fixture data — table handles,
+    :class:`MeasuredBuildSide` measurements and measured join decisions —
+    lives in the session memo (``catalog.session_memo``) and dies with the
+    session; ``catalog.clear_table_cache`` drops it after a fixture rewrite.
 """
 
 from __future__ import annotations
@@ -56,7 +62,8 @@ _STAGE_CACHES: list[DataFrame] = []
 #: driver-side py4j/analysis cost of recomposing a wide expression tree
 #: per repetition (measured 0.3-0.5 s/rep on the MinHash path — eager
 #: Dataset analysis per select/join). Cleared by release_stage_caches()
-#: between queries and by catalog.clear_table_cache() on fixture rewrite.
+#: when the registry moves to another query, and by
+#: catalog.clear_table_cache() on fixture rewrite.
 #: This memoizes PLANS, never results: every run still computes from the
 #: parquet inputs (the persisted data itself is released per query).
 _STAGE_FRAMES: dict[tuple, DataFrame] = {}
@@ -113,8 +120,11 @@ def spread_stream_side(df: DataFrame) -> DataFrame:
 
 
 def release_stage_caches() -> int:
-    """Unpersist every registered stage cache (non-blocking) and return how
-    many were released. Call between queries; never mid-query."""
+    """Unpersist every registered stage cache (non-blocking), drop the
+    stage frames, and return how many caches were released. The registry
+    builders call it when a different query starts building; a caller
+    that builds stages outside the registry calls it between queries,
+    never mid-query."""
     n = len(_STAGE_CACHES)
     for df in _STAGE_CACHES:
         df.unpersist()
@@ -1484,6 +1494,17 @@ def countmin_cells(tok: DataFrame) -> DataFrame:
     )
 
 
+_BLOOM_M = 256
+
+
+def _bloom_bit(col, start: int):
+    """One Bloom bit position of string column ``col``: the 8 hex digits
+    of its md5 from ``start`` (1 or 9, the two disjoint hashes), as an
+    integer mod m — the oracles' ``CAST(concat('0x', substr(md5(..),
+    start, 8)) AS BIGINT) % m``."""
+    return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("long") % _BLOOM_M
+
+
 def bloom_bit_stream(tok: DataFrame, keep_token: bool = False) -> DataFrame:
     """Raw (bit) stream — both md5-derived positions per token — shared
     by ``sketch_bloom_tokens`` (one-pass aggregate → the filter) and the
@@ -1494,17 +1515,9 @@ def bloom_bit_stream(tok: DataFrame, keep_token: bool = False) -> DataFrame:
     source — 2 input passes per consumer — for the identical multiset);
     ``keep_token=True`` carries the token alongside its bits so a
     consumer can fold token- and bit-level aggregates into one pass."""
-
-    def bit(start):
-        return (
-            F.conv(F.substring(F.md5(F.col("token")), start, 8), 16, 10).cast(
-                "long"
-            )
-            % _BLOOM_M
-        )
-
+    token = F.col("token")
     cols = (["token"] if keep_token else []) + [
-        F.explode(F.array(bit(1), bit(9))).alias("bit")
+        F.explode(F.array(_bloom_bit(token, 1), _bloom_bit(token, 9))).alias("bit")
     ]
     return tok.select(*cols)
 
@@ -6507,7 +6520,6 @@ def corpus_heaps_fit(spark, sf_dir):
     )
 
 
-_BLOOM_M = 256
 _BLOOM_PROBES = ("query", "vector", "zzz_absent", "table", "nonsense_tok")
 
 _BLOOM_ORACLE = f"""
@@ -6567,13 +6579,6 @@ def sketch_bloom_tokens(spark, sf_dir):
     a persisted bit set; same rows out, bit-identical."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(T.tokens(F.col("text"))).alias("token"))
-
-    def bit(col, start):
-        return (
-            F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("long")
-            % _BLOOM_M
-        )
-
     row = bloom_bit_stream(tok, keep_token=True).agg(
         F.collect_set("bit").alias("bset"),
         *[
@@ -6586,8 +6591,8 @@ def sketch_bloom_tokens(spark, sf_dir):
             F.struct(
                 F.lit(p).alias("token"),
                 (
-                    F.array_contains("bset", bit(F.lit(p), 1))
-                    & F.array_contains("bset", bit(F.lit(p), 9))
+                    F.array_contains("bset", _bloom_bit(F.lit(p), 1))
+                    & F.array_contains("bset", _bloom_bit(F.lit(p), 9))
                 )
                 .cast("int")
                 .alias("maybe_member"),

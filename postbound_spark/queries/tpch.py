@@ -1253,7 +1253,13 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order). One repartition on l_orderkey up front serves the pair
     aggregate AND the window (hash(orderkey) clusters (orderkey,suppkey)
     groups), so the fact data crosses exactly one exchange; numwait =
-    SUM(late_cnt) = the late-line count the old form produced."""
+    SUM(late_cnt) = the late-line count the old form produced.
+
+    Skew assumption: repartitioning BEFORE the pair aggregate ships every
+    line un-aggregated (no map-side partial aggregate ahead of the
+    exchange). That costs nothing while each (order, supplier) pair has
+    few lines, as in TPC-H; a dataset with wide orders (many lines per
+    pair) should re-measure it against a partial aggregate first."""
     from pyspark.sql.window import Window
 
     t = load_tables(spark, sf_dir, ["supplier", "lineitem", "orders"])

@@ -146,12 +146,7 @@ def compare_query(
     from postbound_spark.queries import load_all
 
     qdef = load_all()[name]
-    try:
-        spark_pdf = qdef.builder(spark, sf_dir).toPandas()
-    finally:
-        from postbound_spark.queries.pipeline import release_stage_caches
-
-        release_stage_caches()  # per-query cache lifecycle (pipeline.py)
+    spark_pdf = qdef.builder(spark, sf_dir).toPandas()
     if qdef.oracle is None:
         return True, f"rows-only: {len(spark_pdf)} rows"
     with duckdb_connection(sf_dir) as con:

@@ -22,17 +22,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from postbound_spark.queries import load_all
-    from postbound_spark.queries.pipeline import release_stage_caches
     from postbound_spark.session import get_spark
 
     spark = get_spark("curation-demo", cpus=8, shuffle_partitions=8)
     registry = load_all()
 
     def run(name: str):
-        df = registry[name].builder(spark, sf_dir)
-        rows = df.collect()
-        release_stage_caches()
-        return rows
+        return registry[name].builder(spark, sf_dir).collect()
 
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     print(f"corpus: {n_docs} documents ({sf_dir})")

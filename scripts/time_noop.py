@@ -27,7 +27,6 @@ def main() -> int:
     args = ap.parse_args()
 
     from postbound_spark.queries import load_all
-    from postbound_spark.queries.pipeline import release_stage_caches
     from postbound_spark.session import get_spark
 
     registry = load_all()
@@ -46,7 +45,6 @@ def main() -> int:
             reps.append(time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
         out[name] = round(min(reps), 3)
-        release_stage_caches()
     print(json.dumps({"noop_sec": out, "sf": args.sf,
                       "loadavg": [round(x, 2) for x in os.getloadavg()]}))
     return 0

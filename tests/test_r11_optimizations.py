@@ -11,7 +11,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_stage_frame_memoizes_until_release(spark):
+def test_stage_frame_memoizes_until_release(spark, sf_small):
+    from postbound_spark.catalog import clear_table_cache
+    from postbound_spark.optimizer.selection import MeasuredBuildSide
+    from postbound_spark.queries import load_all
     from postbound_spark.queries import pipeline as P
 
     calls = []
@@ -30,7 +33,41 @@ def test_stage_frame_memoizes_until_release(spark):
     P.release_stage_caches()
     P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
     assert len(calls) == 3
+
+    # the registry owns the per-query lifetime: rebuilding the same query
+    # keeps its stage caches and frames warm, building another query
+    # releases them
+    reg = load_all()
+    reg["q15_top_supplier"].builder(spark, sf_small)
+    q15_caches = list(P._STAGE_CACHES)
+    assert q15_caches and all(df.is_cached for df in q15_caches)
+    P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
+    n = len(calls)
+    reg["q15_top_supplier"].builder(spark, sf_small)
+    P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
+    assert all(df.is_cached for df in q15_caches) and len(calls) == n
+    reg["q11_important_stock"].builder(spark, sf_small)
+    assert not any(df.is_cached for df in q15_caches)
+    assert not any(df is c for df in P._STAGE_CACHES for c in q15_caches)
+    P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
+    assert len(calls) == n + 1
     P.release_stage_caches()
+
+    # the session owns the data-derived lifetime: two MeasuredBuildSide on
+    # one session share a measurement (no second probe job) until
+    # clear_table_cache drops it
+    def next_job_id() -> int:
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    frame = spark.range(10)
+    j0 = next_job_id()
+    assert MeasuredBuildSide(spark).rows_capped(frame, "t_lifecycle", 100) == 10
+    j1 = next_job_id()
+    assert MeasuredBuildSide(spark).rows_capped(frame, "t_lifecycle", 100) == 10
+    assert next_job_id() == j1 > j0
+    clear_table_cache(spark)
+    assert MeasuredBuildSide(spark).rows_capped(frame, "t_lifecycle", 100) == 10
+    assert next_job_id() > j1
 
 
 def test_fits_broadcast_verdict_and_salt_bypass(spark, sf_small):

@@ -18,7 +18,7 @@ def test_hubness_prenormed_cosine_and_measured_spread(spark, sf_small):
     per pair instead of one). And the measured-verdict routing (spread +
     pinned broadcast under the threshold, plain join above) must never
     change the histogram."""
-    from postbound_spark.optimizer.selection import MeasuredBuildSide
+    from postbound_spark.catalog import clear_table_cache
     from postbound_spark.queries import load_all
     from postbound_spark.queries.pipeline import release_stage_caches
 
@@ -34,7 +34,7 @@ def test_hubness_prenormed_cosine_and_measured_spread(spark, sf_small):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        MeasuredBuildSide.clear_memo()
+        clear_table_cache(spark)
         slow_df = reg["ann_hubness_indegree"].builder(spark, sf_small)
         assert "RoundRobinPartitioning" not in str(
             slow_df._jdf.queryExecution().executedPlan()
@@ -42,7 +42,7 @@ def test_hubness_prenormed_cosine_and_measured_spread(spark, sf_small):
         slow = slow_df.collect()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        MeasuredBuildSide.clear_memo()
+        clear_table_cache(spark)
         release_stage_caches()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
 
@@ -160,8 +160,8 @@ def test_dense_pair_block_kernel_matches_jvm_path(spark, sf_small):
     all-JVM pair join — integer-quantized dots are exact in float64
     under any summation order, so the comparison is bit-for-bit tuple
     equality, not approximate."""
+    from postbound_spark.catalog import clear_table_cache
     from postbound_spark.operators import densepair
-    from postbound_spark.optimizer.selection import MeasuredBuildSide
     from postbound_spark.queries import load_all
     from postbound_spark.queries.pipeline import release_stage_caches
 
@@ -169,7 +169,7 @@ def test_dense_pair_block_kernel_matches_jvm_path(spark, sf_small):
     for name in ("dedup_embedding_cosine", "ann_hubness_indegree"):
         jvm = sorted(map(tuple, reg[name].builder(spark, sf_small).collect()))
         release_stage_caches()
-        MeasuredBuildSide.clear_memo()
+        clear_table_cache(spark)
         saved = densepair.DENSE_PAIR_MAX_VECTORS
         densepair.DENSE_PAIR_MAX_VECTORS = 4  # force the kernel path
         try:
@@ -181,7 +181,7 @@ def test_dense_pair_block_kernel_matches_jvm_path(spark, sf_small):
         finally:
             densepair.DENSE_PAIR_MAX_VECTORS = saved
             release_stage_caches()
-            MeasuredBuildSide.clear_memo()
+            clear_table_cache(spark)
         assert jvm == ker and jvm, name
 
 
