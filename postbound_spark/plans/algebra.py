@@ -420,6 +420,20 @@ def _output_name(text: str) -> str | None:
     return m.group(2) if m else None
 
 
+_STAR_ITEM_RE = re.compile(r"^\*(?:\s+except\s*\((.*)\))?$", re.I | re.S)
+
+
+def _star_passes(text: str, column: str) -> bool:
+    """Whether the select item ``text`` is a bare ``*`` (or a ``* EXCEPT
+    (...)`` not listing ``column``) and so carries the plain FROM column
+    ``column`` through the projection unchanged."""
+    m = _STAR_ITEM_RE.match(text)
+    if m is None or not _SIMPLE_COL_RE.match(column):
+        return False
+    excluded = (m.group(1) or "").split(",")
+    return column not in {c.strip().rsplit(".", 1)[-1] for c in excluded}
+
+
 # ---------------------------------------------------------------------------
 # conversion
 # ---------------------------------------------------------------------------
@@ -2815,11 +2829,14 @@ class _Converter:
         # sort keys that are OUTPUT columns (aliases or plain select
         # columns) can sort above the projection — which is what lets
         # FETCH PRIOR combine with DISTINCT for the valid-SQL case where
-        # the ORDER BY keys sit in the select list
+        # the ORDER BY keys sit in the select list; a `*` item passes every
+        # plain FROM column through
         output_names = {p.alias or _output_name(p.expr.sql) for p in q.select}
         output_names.discard(None)
         sort_in_output = bool(sort_keys) and all(
-            o.expr.sql in output_names for o in q.order_by
+            o.expr.sql in output_names
+            or any(_star_passes(p.expr.sql, o.expr.sql) for p in q.select)
+            for o in q.order_by
         )
         # window functions in the SELECT list: the window's own exchange
         # (hash partitioning on its PARTITION BY keys) destroys any row

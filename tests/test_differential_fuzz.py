@@ -27,10 +27,11 @@ random cyclic digraphs; DuckDB runs the identical text).
 Grammar v23 (round-11): correlated EXISTS with GROUP BY + HAVING in
 predicate position (the grouped decorrelation), and MIXED GROUP BY
 lists (plain item composed with ROLLUP/CUBE as the ANSI cross product).
-GROUPS window frames are NOT emitted: this container's DuckDB rejects
-GROUPS mode outright, so differential coverage there comes from probe
-wave 12 (the engine's desugared render on the oracle side) and the
-pure-Python peer-group reference in tests/test_groups_frames.py.
+GROUPS window frames are NOT emitted: DuckDB 1.0 rejects GROUPS mode
+outright, so differential coverage there comes from the 22 ``groups_*``
+probes of tests/probe_corpus.py (the engine's desugared render on the
+oracle side) and the pure-Python peer-group reference in
+tests/test_groups_frames.py.
 
 Grammar v24 (round-11 waves 23-25): the DuckDB LIST function family —
 bracket literals, list_sort/list_distinct/list_unique,

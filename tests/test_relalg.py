@@ -214,3 +214,22 @@ def test_bag_except_all_count_form(spark):
             left.exceptAll(right.toDF("k", "v"))
             .groupBy("k", "v").agg(F.count(F.lit(1))).collect()}
     assert counts == want
+
+
+def test_star_window_select_sorts_above_projection():
+    # a bare `*` (or a `* EXCLUDE` that keeps the key) passes the ORDER BY
+    # column through, so the Sort sits above the window projection; once
+    # the key is excluded the select list cannot carry it
+    from postbound_spark.plans.algebra import parse_relalg
+    from postbound_spark.plans.parser import UnsupportedSqlError, parse_query
+
+    schema = {"region": ["r_regionkey", "r_name", "r_comment"]}
+    window = "count(*) OVER (ORDER BY r_regionkey ROWS 1 PRECEDING) AS c"
+    for star in ("*", "* EXCLUDE (r_name)"):
+        sql = f"SELECT {star}, {window} FROM region ORDER BY r_regionkey"
+        plan = parse_relalg(parse_query(sql, schema=schema))
+        assert isinstance(plan, ra.Sort)
+        assert isinstance(plan.child, ra.Projection)
+    sql = f"SELECT * EXCLUDE (r_regionkey), {window} FROM region ORDER BY r_regionkey"
+    with pytest.raises(UnsupportedSqlError):
+        parse_relalg(parse_query(sql, schema=schema))

@@ -189,3 +189,30 @@ def test_skew_aware_join_salts_only_when_skewed(spark):
         uniform, right, ["k"], salt_on=["k", "row_id"]
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "__pb_salt" not in plain_plan and "xxhash64" not in plain_plan
+
+
+def test_fits_broadcast_verdict_and_salt_bypass(spark, sf_small):
+    from postbound_spark.optimizer.selection import MeasuredBuildSide
+    from postbound_spark.queries import load_all
+    from postbound_spark.queries.pipeline import release_stage_caches
+
+    mb = MeasuredBuildSide(spark)
+    tiny = spark.range(10).withColumn("k", F.col("id") % 3)
+    assert mb.fits_broadcast(tiny, "t_fits_tiny") is True
+    # a threshold of -1 disables broadcasting outright (Spark convention)
+    assert MeasuredBuildSide(spark, threshold_bytes=-1).fits_broadcast(
+        tiny, "t_fits_disabled"
+    ) is False
+    # a frame provably past a 1-byte threshold must not fit
+    assert MeasuredBuildSide(spark, threshold_bytes=1).fits_broadcast(
+        spark.range(1000), "t_fits_big"
+    ) is False
+
+    # end-to-end: at fixture scale the band table fits, so the candidate
+    # join is UNSALTED (no __pb_salt column, no 8x Generate) and pins a
+    # broadcast build — identical candidate pairs either way, which the
+    # oracle entries for the minhash family verify continuously
+    df = load_all()["dedup_minhash_lsh"].builder(spark, sf_small)
+    plan = df._jdf.queryExecution().toString()
+    assert "__pb_salt" not in plan
+    release_stage_caches()

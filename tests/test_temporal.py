@@ -1,6 +1,7 @@
 """Temporal operator edge semantics (asof_join / range_join_binned) —
 regression suite for the round-2 review findings: NULL exclusion, tie
-determinism, exact big-integer binning."""
+determinism, exact big-integer binning. Also the LSH text functions
+and the prepared-expression memo (``expr_memo``) they are built on."""
 
 from __future__ import annotations
 
@@ -105,3 +106,70 @@ def test_minhash_universal_family_range_and_determinism(spark):
         assert all(0 <= v < T.MINHASH_P for v in r.sig), r.sig
     assert rows[0].sig == rows[1].sig  # identical text -> identical signature
     assert rows[0].sig != rows[2].sig
+
+
+def test_expr_memo_reuses_composed_columns():
+    from postbound_spark.functions import text as T
+    from postbound_spark.functions.exprcache import expr_memo
+
+    c1 = T.simhash16_from_hashes(F.col("th"))
+    c2 = T.simhash16_from_hashes(F.col("th"))
+    assert c1 is c2  # same expression text -> same cached Column
+    assert T.simhash16_from_hashes(F.col("other")) is not c1
+
+    calls = []
+
+    @expr_memo
+    def composer(col, k=1):
+        calls.append(1)
+        return col + k
+
+    composer(F.col("x"), k=2)
+    composer(F.col("x"), k=2)
+    assert len(calls) == 1
+    composer(F.col("x"), k=3)
+    assert len(calls) == 2
+
+
+def test_expr_memo_skips_plan_bound_and_lambda_columns(spark):
+    """Df-bound columns stringify identically across DataFrames but carry
+    plan ids — they must bypass the memo; lambda variables get fresh
+    names per composition and must not grow the cache; unresolved F.col
+    attributes still memoize."""
+    from postbound_spark.functions.exprcache import expr_memo
+
+    calls = []
+
+    @expr_memo
+    def comp(c):
+        calls.append(1)
+        return c * 2
+
+    df1 = spark.range(3).toDF("x")
+    df2 = spark.range(4).toDF("x")
+    comp(df1["x"])
+    comp(df2["x"])
+    assert len(calls) == 2  # no cross-DataFrame cache hit
+    assert len(comp._expr_cache) == 0  # and nothing was stored
+
+    assert comp(F.col("x")) is comp(F.col("x"))
+    assert len(calls) == 3  # unresolved attributes still memoize
+
+    n0 = len(comp._expr_cache)
+    spark.range(1).select(
+        F.transform(F.array(F.lit(1)), lambda v: comp(v)).alias("t")
+    ).collect()
+    assert len(comp._expr_cache) == n0  # lambda vars never enter the cache
+
+
+def test_expr_memo_cache_is_bounded():
+    from postbound_spark.functions import exprcache
+    from postbound_spark.functions.exprcache import expr_memo
+
+    @expr_memo
+    def comp(k):
+        return F.lit(k)
+
+    for i in range(exprcache._CACHE_CAP + 10):
+        comp(i)
+    assert len(comp._expr_cache) <= exprcache._CACHE_CAP
