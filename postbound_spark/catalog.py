@@ -88,8 +88,10 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 #: attribute under which the session memo lives ON the session object.
 #: It holds everything derived from the fixture data, keyed by a leading
-#: tag: table handles (``"table"``) and the measured cardinalities and
-#: join decisions of ``optimizer/selection.py`` (``"rows"``, ``"join"``).
+#: tag: table handles (``"table"``), the measured cardinalities and
+#: join decisions of ``optimizer/selection.py`` (``"rows"``, ``"join"``)
+#: and the optimizer's per-table statistics (``"profile"``,
+#: ``optimizer/stats.py``).
 #: ``spark.read.parquet`` re-lists files and re-infers the footer schema on
 #: every call (~80 ms x 5 tables per query build — measured as the single
 #: largest repeated cost of the bench). A DataFrame is an immutable plan
@@ -116,7 +118,9 @@ def clear_table_cache(spark: SparkSession) -> None:
     """Drop everything the session has derived from the fixture data — for
     callers that rewrite fixture files in place. That is the session memo
     (table handles, measured cardinalities, join decisions) and the
-    pipeline's stage frames, which are plans over the old tables."""
+    pipeline's stage frames, which are plans over the old tables. It is
+    also the only way to drop the optimizer's table statistics, which are
+    keyed by plan and so cannot see a file rewritten under the same path."""
     from postbound_spark.queries.pipeline import _STAGE_FRAMES
 
     _STAGE_FRAMES.clear()

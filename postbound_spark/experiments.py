@@ -158,20 +158,18 @@ LINEAR_SEARCH_ABOVE = 10
 
 
 class _MatrixContext:
-    """Shared per-run state for the strategy loop: the stats estimator
-    (its per-table statistics are reused across strategies of a query),
-    the TONIC trie being trained, and the last forced JoinTree per query
-    (TONIC replays operators onto it)."""
+    """Shared per-run state for the strategy loop: the TONIC trie being
+    trained and the last forced JoinTree per query (TONIC replays
+    operators onto it). The statistics the ues/dp/pgdp strategies read
+    are not run state: they live in the session memo
+    (:func:`~postbound_spark.optimizer.stats.table_profile`), shared by
+    every strategy, query and run on the session."""
 
     def __init__(
         self, trie_path: str | None = None, tonic_filter_aware: bool = False
     ):
-        from postbound_spark.optimizer.cardinalities import (
-            StatsCardinalityEstimator,
-        )
         from postbound_spark.optimizer.tonic import TonicOperatorSelection
 
-        self.stats_estimator = StatsCardinalityEstimator()
         self.tonic = TonicOperatorSelection(filter_aware=tonic_filter_aware)
         self.trie_path = trie_path
         self.last_tree = None  # most recent forced JoinTree (current query)
@@ -211,7 +209,11 @@ def _plan_order(spark, strategy: str, parsed, spec, tables, context=None):
 
         tree = UESJoinOrderOptimizer(spark).optimize_join_order(spec, tables)
         return tree.tables(), tree.cardinality, None, tree
-    context = context or _MatrixContext()
+    from postbound_spark.optimizer.cardinalities import (
+        PreciseCardinalities,
+        StatsCardinalityEstimator,
+    )
+
     if strategy == "dp":
         from postbound_spark.optimizer.dynprog import (
             DynamicProgrammingEnumerator,
@@ -219,24 +221,22 @@ def _plan_order(spark, strategy: str, parsed, spec, tables, context=None):
 
         bushy = len(spec.tables) <= LINEAR_SEARCH_ABOVE
         tree = DynamicProgrammingEnumerator(
-            context.stats_estimator, bushy=bushy
+            StatsCardinalityEstimator(), bushy=bushy
         ).optimize_join_order(spec, tables)
         return tree.tables(), math.nan, None, tree
     if strategy in ("pgdp", "pgdp-precise"):
         from postbound_spark.optimizer import PostgresStyleDynProg
 
         if strategy == "pgdp-precise":
-            from postbound_spark.optimizer import PreciseCardinalities
-
             estimator = PreciseCardinalities()
         else:
-            estimator = context.stats_estimator
+            estimator = StatsCardinalityEstimator()
         tree, assignment = PostgresStyleDynProg(
             estimator, linear=len(spec.tables) > LINEAR_SEARCH_ABOVE
         ).generate_execution_plan(spec, tables)
         return tree.tables(), math.nan, assignment, tree
     if strategy == "tonic":
-        if context.last_tree is None:
+        if context is None or context.last_tree is None:
             raise ValueError(
                 "the 'tonic' strategy replays learned operators onto the "
                 "query's last forced join order — run it after a forced-"

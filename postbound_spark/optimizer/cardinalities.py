@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from postbound_spark.optimizer.hints import compile_join_tree
 from postbound_spark.optimizer.jointree import JoinTree
 from postbound_spark.optimizer.stages import CardinalityEstimator, QuerySpec
+from postbound_spark.optimizer.stats import table_profile
 
 
 class PreciseCardinalities(CardinalityEstimator):
@@ -115,10 +116,13 @@ class StatsCardinalityEstimator(CardinalityEstimator):
         |S|  =  Π_{T∈S} |σ(T)|  ×  Π_{edge⊆S} 1 / max(ndv(l), ndv(r))
 
     (attribute independence + containment of value sets — the classical
-    formula every Selinger-style optimizer runs on). One aggregation job
-    per (table, join-column-set) collects COUNT(*) plus HLL
-    ``approx_count_distinct`` for every join column the spec touches;
-    after that, every subset estimate is O(1) arithmetic. The 3^n DP
+    formula every Selinger-style optimizer runs on). The inputs are each
+    filtered table's COUNT(*) plus the HLL ``approx_count_distinct`` of
+    every join column the spec touches, read from its
+    :func:`~postbound_spark.optimizer.stats.table_profile`: one Spark
+    action per filtered table on first use, shared through the session
+    memo with UES and every later plan of the same table. After that,
+    every subset estimate is O(1) arithmetic. The 3^n DP
     enumerations (:mod:`~postbound_spark.optimizer.dynprog`,
     :mod:`~postbound_spark.optimizer.pgdp`) call the estimator once per
     connected subset — :class:`PreciseCardinalities` would pay one
@@ -138,32 +142,27 @@ class StatsCardinalityEstimator(CardinalityEstimator):
     """
 
     def __init__(self):
-        # (name, id, cols) -> (count, {col: ndv}, weakref-to-frame)
-        self._stats: dict[tuple, tuple[float, dict[str, float], object]] = {}
+        #: (name, cols) -> (frame, stats) for the frame last asked about
+        #: under that name. A DP enumeration asks once per connected subset
+        #: for the same few frames; the identity check skips the memo's
+        #: semantic lookup (two JVM calls) on those repeats. Holding the
+        #: frame keeps its id from being recycled, and one entry per name
+        #: bounds what the estimator holds.
+        self._last: dict[tuple, tuple[DataFrame, tuple[float, dict[str, float]]]] = {}
 
     def _table_stats(
         self, name: str, df: DataFrame, cols: tuple[str, ...]
     ) -> tuple[float, dict[str, float]]:
-        key = (name, id(df), cols)
-        hit = self._stats.get(key)
-        if hit is not None and hit[2]() is df:  # id not recycled
-            return hit[0], hit[1]
-        from pyspark.sql import functions as F
-
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        aggs += [
-            F.approx_count_distinct(c).alias(f"__ndv_{i}")
-            for i, c in enumerate(cols)
-        ]
-        row = df.agg(*aggs).collect()[0]
-        count = float(row["__n"])
-        ndv = {c: max(1.0, float(row[f"__ndv_{i}"])) for i, c in enumerate(cols)}
-        self._stats[key] = (
-            count,
-            ndv,
-            weakref.ref(df, lambda _r, k=key: self._stats.pop(k, None)),
-        )
-        return count, ndv
+        """``name``'s filtered row count and join-column distinct counts
+        (floored at one, the divisor convention)."""
+        hit = self._last.get((name, cols))
+        if hit is not None and hit[0] is df:
+            return hit[1]
+        profile = table_profile(df, cols)
+        ndv = {c: max(1.0, float(n)) for c, n in profile.distinct_counts.items()}
+        stats = (float(profile.row_count), ndv)
+        self._last[(name, cols)] = (df, stats)
+        return stats
 
     def estimate_cardinality(
         self,
@@ -185,17 +184,11 @@ class StatsCardinalityEstimator(CardinalityEstimator):
         estimate, ``prod`` the filtered cross product (pre-division
         size), ``min_base``/``max_base`` the extreme filtered base
         cardinalities, ``n_edges`` the join edges inside the subset."""
-        join_cols: dict[str, set[str]] = {t: set() for t in spec.tables}
-        for e in spec.edges:
-            join_cols.setdefault(e.left_table, set()).add(e.left_col)
-            join_cols.setdefault(e.right_table, set()).add(e.right_col)
         est = 1.0
         counts: list[float] = []
         stats: dict[str, tuple[float, dict[str, float]]] = {}
         for t in intermediate:
-            stats[t] = self._table_stats(
-                t, tables[t], tuple(sorted(join_cols.get(t, ())))
-            )
+            stats[t] = self._table_stats(t, tables[t], spec.join_columns(t))
             est *= stats[t][0]
             counts.append(stats[t][0])
         prod = est

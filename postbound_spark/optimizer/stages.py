@@ -44,6 +44,13 @@ class QuerySpec:
     def join_graph(self) -> JoinGraph:
         return JoinGraph(list(self.tables), list(self.edges))
 
+    def join_columns(self, table: str) -> tuple[str, ...]:
+        """The sorted columns of ``table`` that some edge joins on."""
+        return tuple(sorted(
+            {e.left_col for e in self.edges if e.left_table == table}
+            | {e.right_col for e in self.edges if e.right_table == table}
+        ))
+
 
 @dataclass
 class PlanParameterization:

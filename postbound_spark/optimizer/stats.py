@@ -2,8 +2,8 @@
 
 Mirrors the reference's ``DatabaseStatistics`` (rbergm/PostBOUND
 ``postbound/db/_db.py:1965``): *emulated* mode computes every statistic
-with plain queries (``_db.py:1983-1987``, ``_calculate_* :2697-2871``);
-*native* mode reads the backend's own stats. Here:
+with plain queries (``_db.py:1983-1987``, ``_calculate_* :2697-2871``)
+and caches them; *native* mode reads the backend's own stats. Here:
 
 - emulated = DataFrame aggregates (COUNT, approx_count_distinct, MIN/MAX,
   groupBy-count-limit for MCVs, ``approxQuantile`` for equi-depth
@@ -12,9 +12,13 @@ with plain queries (``_db.py:1983-1987``, ``_calculate_* :2697-2871``);
 - native = ``ANALYZE TABLE ... COMPUTE STATISTICS`` + catalog readback,
   feeding Catalyst CBO the way the reference feeds its cost models.
 
-``max_frequency`` is the one statistic the UES optimizer needs
+The join-ordering stages read one :func:`table_profile` per filtered
+base table instead: row count, HLL distinct count and exact max
+frequency of every join column from a single Spark action, memoized on
+the session. ``max_frequency`` is the statistic the UES optimizer needs
 (ref: ``opt/ues.py:300`` MaxFrequencyStats) — the highest duplication
-factor of any value in a join column.
+factor of any value in a join column; the distinct counts feed the
+System-R estimates of the DP enumerators.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from postbound_spark.catalog import session_memo
+
 
 @dataclass(frozen=True)
 class ColumnStats:
@@ -32,6 +38,69 @@ class ColumnStats:
     min_value: object
     max_value: object
     max_frequency: int
+
+
+@dataclass(frozen=True)
+class TableProfile:
+    """The statistics the join-ordering stages read off one filtered base
+    table: its row count and, per join column, the HLL distinct count
+    (``approx_count_distinct``) and the exact max frequency (the null
+    group included, as ``groupBy(col).count()`` has it)."""
+
+    row_count: int
+    distinct_counts: dict[str, int]
+    max_frequencies: dict[str, int]
+
+
+def table_profile(df: DataFrame, cols: tuple[str, ...] = ()) -> TableProfile:
+    """The :class:`TableProfile` of ``df`` over the join columns ``cols``,
+    from one Spark action on first use and from the session memo
+    (:func:`postbound_spark.catalog.session_memo`) after that.
+
+    The memo key is the frame's semantic hash, and a hit is confirmed
+    with ``sameSemantics``: frames rebuilt by later queries, strategies
+    and loop runs share an entry, while the same table under two filters
+    (a self-join's aliases) gets two. Object identity would die with each
+    rebuilt frame, and a plan string is truncated by
+    ``spark.sql.debug.maxToStringFields``. The entry lives as long as the
+    session; :func:`postbound_spark.catalog.clear_table_cache` drops it."""
+    cols = tuple(sorted(set(cols)))
+    entries = session_memo(df.sparkSession).setdefault(
+        ("profile", df.semanticHash(), cols), []
+    )
+    for seen, profile in entries:
+        if df.sameSemantics(seen):
+            return profile
+    profile = _profile_pass(df, cols)
+    entries.append((df, profile))
+    return profile
+
+
+def _profile_pass(df: DataFrame, cols: tuple[str, ...]) -> TableProfile:
+    """One grouping-sets pass — a group per value of each column plus the
+    grand total — then one global aggregate over the groups: the total's
+    count is the row count, each column's largest group its max
+    frequency. HLL registers depend only on the set of distinct values,
+    so the sketch over the grouped rows equals the sketch over the raw
+    rows (other grouping sets carry the column as NULL, which the sketch
+    skips). An empty input yields no groups at all, hence the defaults."""
+    m = len(cols)
+    total = (1 << m) - 1  # grouping_id of the empty set: every bit rolled up
+    gid, n = F.col("__gid"), F.col("__n")
+    groups = df.groupingSets([[c] for c in cols] + [[]], *cols).agg(
+        F.count(F.lit(1)).alias("__n"), F.grouping_id().alias("__gid")
+    )
+    aggs = [F.max(F.when(gid == total, n)).alias("__rows")]
+    for i, c in enumerate(cols):
+        only_c = total ^ (1 << (m - 1 - i))
+        aggs.append(F.max(F.when(gid == only_c, n)).alias(f"__mf_{i}"))
+        aggs.append(F.approx_count_distinct(c).alias(f"__ndv_{i}"))
+    row = groups.agg(*aggs).collect()[0]
+    return TableProfile(
+        row_count=int(row["__rows"] or 0),
+        distinct_counts={c: int(row[f"__ndv_{i}"]) for i, c in enumerate(cols)},
+        max_frequencies={c: int(row[f"__mf_{i}"] or 0) for i, c in enumerate(cols)},
+    )
 
 
 class EmulatedStatistics:

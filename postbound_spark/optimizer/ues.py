@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from postbound_spark.optimizer.joingraph import JoinEdge
 from postbound_spark.optimizer.jointree import JoinTree
 from postbound_spark.optimizer.stages import JoinOrderOptimization, QuerySpec
-from postbound_spark.optimizer.stats import EmulatedStatistics
+from postbound_spark.optimizer.stats import table_profile
 
 __all__ = [
     "UESJoinOrderOptimizer",
@@ -68,18 +68,22 @@ class MaxFrequencyStatsContainer:
 
     @classmethod
     def from_spark(
-        cls, stats: EmulatedStatistics, spec: QuerySpec, tables: dict[str, DataFrame]
+        cls, spec: QuerySpec, tables: dict[str, DataFrame]
     ) -> "MaxFrequencyStatsContainer":
-        """Inflate from live statistics: one COUNT per table, one
-        groupBy-count-max per distinct join column (ref
+        """Inflate from each filtered table's statistics profile: its row
+        count and the max frequency of every join column (ref
         ``_inflate_base_table_estimates`` :242, ``_inflate_attribute_
-        frequencies`` :321 — the MCV top-1 count IS the max frequency)."""
-        rows = {t: float(stats.row_count(tables[t])) for t in spec.tables}
+        frequencies`` :321 — the MCV top-1 count IS the max frequency).
+        :func:`~postbound_spark.optimizer.stats.table_profile` computes a
+        table's profile in one Spark action and the session memo serves
+        it to the DP estimators and every later plan of the same table."""
+        rows: dict[str, float] = {}
         freq: dict[tuple[str, str], float] = {}
-        for e in spec.edges:
-            for tbl, col in ((e.left_table, e.left_col), (e.right_table, e.right_col)):
-                if (tbl, col) not in freq:
-                    freq[(tbl, col)] = float(stats.max_frequency(tables[tbl], col))
+        for t in spec.tables:
+            profile = table_profile(tables[t], spec.join_columns(t))
+            rows[t] = float(profile.row_count)
+            for col, f in profile.max_frequencies.items():
+                freq[(t, col)] = float(f)
         return cls(rows, freq)
 
     def bound(self, table: str) -> float:
@@ -189,13 +193,12 @@ class UESJoinOrderOptimizer(JoinOrderOptimization):
 
     def __init__(self, spark: SparkSession, subquery_policy=None):
         self.spark = spark
-        self.stats_backend = EmulatedStatistics(spark)
         self.subquery_policy = subquery_policy or UESSubqueryPolicy()
 
     def optimize_join_order(
         self, spec: QuerySpec, tables: dict[str, DataFrame]
     ) -> JoinTree:
-        stats = MaxFrequencyStatsContainer.from_spark(self.stats_backend, spec, tables)
+        stats = MaxFrequencyStatsContainer.from_spark(spec, tables)
         return self.optimize_with_stats(spec, stats)
 
     def optimize_with_stats(
