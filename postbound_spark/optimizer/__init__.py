@@ -24,9 +24,7 @@ from postbound_spark.optimizer.analysis import (
     possible_plans_bound,
 )
 from postbound_spark.optimizer.dynprog import DynamicProgrammingEnumerator
-from postbound_spark.optimizer.injection import CardinalityInjector
 from postbound_spark.optimizer.hints import (
-    FORCED_ORDER_CONF,
     DirectionalJoinAssignment,
     JoinOperator,
     PhysicalOperatorAssignment,
@@ -79,7 +77,6 @@ from postbound_spark.optimizer.ues import UESJoinOrderOptimizer
 __all__ = [
     "CardCorrector",
     "CardinalityDistortion",
-    "CardinalityInjector",
     "CardinalityEstimator",
     "ColumnStats",
     "CostModel",
@@ -91,7 +88,6 @@ __all__ = [
     "CatalystNativeOptimizer",
     "EquiJoinPreCheck",
     "DirectionalJoinAssignment",
-    "FORCED_ORDER_CONF",
     "JoinEdge",
     "JoinGraph",
     "JoinOperator",

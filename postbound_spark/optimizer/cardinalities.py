@@ -187,7 +187,9 @@ class StatsCardinalityEstimator(CardinalityEstimator):
         est = 1.0
         counts: list[float] = []
         stats: dict[str, tuple[float, dict[str, float]]] = {}
-        for t in intermediate:
+        # sorted: float products depend on order, and frozenset order
+        # follows the process's string-hash seed
+        for t in sorted(intermediate):
             stats[t] = self._table_stats(t, tables[t], spec.join_columns(t))
             est *= stats[t][0]
             counts.append(stats[t][0])

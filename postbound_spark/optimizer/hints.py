@@ -164,15 +164,6 @@ class PhysicalOperatorAssignment:
             spark.conf.set(key, value)
 
 
-#: conf that pins join order to construction order (the Spark analog of the
-#: reference's `Set(join_collapse_limit 1)` discipline)
-FORCED_ORDER_CONF = {
-    "spark.sql.cbo.joinReorder.enabled": "false",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-}
-
-
 #: assumed bytes/row when converting an injected cardinality to a size —
 #: deliberately pessimistic (joined intermediates are wide)
 INJECTED_ROW_BYTES = 64
@@ -194,16 +185,15 @@ def compile_join_tree(
     (the reference models them as explicit CrossProduct nodes).
 
     ``parameters`` (a ``PlanParameterization``, ref ``_hints.py:632``)
-    carries per-intermediate cardinality injections. Catalyst exposes no
-    public hook for substituting an intermediate's ``Statistics`` (base
-    tables go through the Hive-property route, ``optimizer/injection.py``),
-    so injected intermediate cardinalities are enforced HERE, where the
-    engine owns the plan: when the build side's table-set has an injected
-    row count, that number — not Catalyst's estimate — decides broadcast
-    vs sort-merge, pinned via the join hint. This is the pg_lab ``Card``
-    capability (ref ``postgres.py:2343``) expressed through
-    enforcement-by-construction; an explicit operator in ``assignment``
-    still wins over the derived one.
+    carries per-intermediate cardinality injections for the tree built
+    here: when the build side's table set has an injected row count, that
+    number — not Catalyst's estimate — decides broadcast vs sort-merge,
+    pinned via the join hint. This is the pg_lab ``Card`` capability (ref
+    ``postgres.py:2343``) expressed through enforcement-by-construction,
+    keyed by alias sets; an explicit operator in ``assignment`` still wins
+    over the derived one. For SQL that Catalyst plans itself, the channel
+    is :class:`~postbound_spark.optimizer.planstats.PlanTimeCardinalityInjector`,
+    which seeds the intermediates' ``Statistics`` at plan time.
     """
     import math
 

@@ -7,10 +7,9 @@ join of a given *table set* is replaced by a researcher-chosen number, no
 data is touched, and a cardinality sweep of hundreds of points costs
 hundreds of plan compilations — not hundreds of writes.
 
-This module is the Spark-native equivalent, closing the gap left by
-:mod:`postbound_spark.optimizer.intermediates` (which needs the target
-expressed as a CTE and pays a ``saveAsTable`` materialization per
-intermediate):
+This module is the Spark-native equivalent and the engine's one channel
+for injecting statistics into Catalyst (any table set of any SQL, no CTE
+rewrite, no materialization):
 
 1. the query is analyzed + optimized normally (``qe.optimizedPlan()`` —
    physical planning has not happened yet at that point);
@@ -52,7 +51,7 @@ Scope hygiene: the helper registers a session-global extra strategy, so
 use the injector as a context manager (or call ``close()``) to
 deregister it and strip the tags once the experiment ends.
 
-No Hive catalog, no writes — works on the plain in-memory-catalog session.
+No writes, no catalog state — works on the plain in-memory-catalog session.
 """
 
 from __future__ import annotations
@@ -81,10 +80,9 @@ def ensure_helper_compiled() -> str:
     """Compile the JVM helper if missing or stale; return the classes dir.
 
     One ``javac`` invocation per checkout (the .class is cached next to
-    the source and only rebuilt when the source is newer). Raises a clear
-    error when no JDK is available — the CTE-based
-    :class:`~postbound_spark.optimizer.intermediates.IntermediateCardinalityInjector`
-    remains the fallback there.
+    the source and only rebuilt when the source is newer). A JDK is
+    required: raises a clear error when ``javac`` is missing (a JRE alone
+    cannot build the helper).
     """
     if os.path.exists(_CLASS_FILE) and os.path.getmtime(_CLASS_FILE) >= os.path.getmtime(
         _JAVA_SRC
@@ -108,9 +106,9 @@ def ensure_helper_compiled() -> str:
         )
     except FileNotFoundError as exc:
         raise RuntimeError(
-            "plan-time cardinality injection needs a JDK (javac) to build "
-            "its JVM helper once; use IntermediateCardinalityInjector on "
-            "JRE-only machines"
+            "plan-time cardinality injection requires a JDK: javac builds "
+            "its JVM helper once per checkout, and no javac was found on "
+            "PATH (a JRE alone is not enough)"
         ) from exc
     except subprocess.CalledProcessError as exc:
         raise RuntimeError(f"helper compilation failed:\n{exc.stderr}") from exc
@@ -187,10 +185,7 @@ def _leaf_table(jnode) -> str | None:
     """Base-table name of a leaf node: catalog identifier when present,
     else the parquet location's basename (``.../nation.parquet`` →
     ``nation`` — the fixture/lakehouse layout)."""
-    name = jnode.nodeName()
-    if name == "HiveTableRelation":
-        return jnode.tableMeta().identifier().table().lower()
-    if name == "LogicalRelation":
+    if jnode.nodeName() == "LogicalRelation":
         ct = jnode.catalogTable()
         if ct.isDefined():
             return ct.get().identifier().table().lower()

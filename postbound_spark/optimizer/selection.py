@@ -26,8 +26,9 @@ unhinted, and AQE's runtime re-plan converts it back to a broadcast join
 from the actual shuffle sizes (measured: q5's dim bundle executes as a
 broadcast join under AQE despite the inflated plan-time estimate). Base
 tables and post-filter scans estimate from file bytes and stay accurate.
-Feeding ``ANALYZE``-based CBO stats (optimizer/injection.py's Hive channel)
-tightens the plan-time numbers when an experiment needs them.
+An experiment that needs exact plan-time numbers injects them with
+optimizer/planstats.py, which seeds Catalyst's statistics for any table set
+before physical planning.
 """
 
 from __future__ import annotations

@@ -174,9 +174,8 @@ def opt_injected_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the orders⋈lineitem intermediate tiny (invites one) — the exact
     misestimate-sensitivity experiment the reference runs, with the
     oracle asserting the invariant that statistics can never change
-    results. The Hive-catalog route for queries outside compile_join_tree
-    lives in optimizer/intermediates.py (subprocess-tested: the driver
-    session has no Hive catalog)."""
+    results. Queries outside compile_join_tree inject through
+    optimizer/planstats.py instead (see opt_plantime_cards)."""
     from postbound_spark.optimizer import PlanParameterization
 
     tables = _filtered_tables(spark, sf_dir)
@@ -221,8 +220,8 @@ def opt_plantime_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adversarial single-table cards: customer and lineitem are declared
     billions of rows, killing every broadcast the planner would normally
     pick. The oracle asserts the reference's core invariant — statistics
-    steer the plan, never the results. Nothing is materialized: no Hive
-    catalog, no saveAsTable (contrast optimizer/intermediates.py)."""
+    steer the plan, never the results. Nothing is materialized and no
+    catalog state is written."""
     from postbound_spark.catalog import register_views
     from postbound_spark.optimizer.planstats import PlanTimeCardinalityInjector
 

@@ -23,7 +23,6 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    enable_hive: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for analytic workloads.
 
@@ -76,16 +75,4 @@ def get_spark(
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    if enable_hive:
-        # Derby-backed local metastore; needed only by the cardinality
-        # injector (optimizer/injection.py) — the catalog implementation is
-        # fixed at first-session creation in a JVM.
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="pbs_hive_")
-        builder = (
-            builder.config("spark.sql.warehouse.dir", f"{scratch}/warehouse")
-            .config("spark.driver.extraJavaOptions", f"-Dderby.system.home={scratch}")
-            .enableHiveSupport()
-        )
     return builder.getOrCreate()

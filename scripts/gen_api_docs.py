@@ -118,6 +118,10 @@ def generate(out_dir: str) -> dict[str, str]:
     for fname, text in files.items():
         with open(os.path.join(out_dir, fname), "w") as fh:
             fh.write(text)
+    # pages of deleted modules go with them
+    for fname in set(os.listdir(out_dir)) - set(files):
+        if fname.endswith(".md"):
+            os.remove(os.path.join(out_dir, fname))
     return files
 
 

@@ -266,6 +266,44 @@ def test_parallel_workers_skips_repartition_for_injected_broadcast(spec, tdfs):
     assert df.count() == tdfs["lineitem"].count()
 
 
+def test_intermediate_cardinality_changes_physical_plan(tdfs):
+    """Per-intermediate injection (ref pg_lab Card hints, postgres.py:2343):
+    the SAME join tree planned under two different injected cardinalities
+    for the {orders, customer} intermediate must yield two different
+    physical plans — broadcast of the intermediate when the injected count
+    is tiny, sort-merge when it is huge."""
+    from postbound_spark.optimizer.stages import PlanParameterization
+
+    tree = JoinTree.join(
+        JoinTree.leaf("lineitem"),
+        JoinTree.join(JoinTree.leaf("orders"), JoinTree.leaf("customer")),
+    )
+    edges = [
+        JoinEdge("lineitem", "l_orderkey", "orders", "o_orderkey"),
+        JoinEdge("orders", "o_custkey", "customer", "c_custkey"),
+    ]
+
+    def plan_with(card: float) -> str:
+        params = PlanParameterization()
+        params.set_cardinality(frozenset({"orders", "customer"}), card)
+        df = compile_join_tree(tdfs, tree, edges, parameters=params)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    tiny = plan_with(10.0)
+    huge = plan_with(1e9)
+    assert "BroadcastHashJoin" in tiny
+    assert "SortMergeJoin" in huge
+    assert tiny != huge
+
+    # identical rows either way: injection changes the plan, never results
+    params = PlanParameterization()
+    params.set_cardinality(frozenset({"orders", "customer"}), 10.0)
+    a = compile_join_tree(tdfs, tree, edges, parameters=params).count()
+    params.set_cardinality(frozenset({"orders", "customer"}), 1e9)
+    b = compile_join_tree(tdfs, tree, edges, parameters=params).count()
+    assert a == b
+
+
 def test_directional_inner_outer_convention():
     """from_inner_outer applies the reference's per-operator wording:
     hash joins build on the OUTER, nested-loop joins materialize the

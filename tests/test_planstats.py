@@ -3,11 +3,15 @@
 The pg_lab parity gate (ref postbound/postgres.py:2343-2460): injected
 cardinalities must flip the PHYSICAL plan of an arbitrary (non-CTE) query
 with no table written, and injected plans must return identical results.
+The flip tests run every query in ``CASES``: a three-way join, a base-table
+join whose 25-row ``nation`` stops being broadcast once it is declared 10M
+rows, and a query whose intermediate is written as a CTE in plain SQL.
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import pytest
 
@@ -22,6 +26,55 @@ WHERE c_acctbal > 0
 GROUP BY o_orderpriority
 """
 
+NATION_SQL = """
+SELECT c.c_custkey, n.n_name
+FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+"""
+
+CTE_SQL = """
+WITH active_cust AS (
+  SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal > 1000
+)
+SELECT a.c_nationkey, count(*) AS n_orders
+FROM orders o
+JOIN active_cust a ON o.o_custkey = a.c_custkey
+GROUP BY a.c_nationkey
+"""
+
+
+class Case(NamedTuple):
+    sql: str
+    #: a join-key column that names the join under test
+    key: str
+    #: the build side Catalyst picks from the real statistics
+    default_build: str
+    #: cards under which the join still broadcasts, from ``tiny_build``
+    tiny: dict
+    tiny_build: str
+    #: cards under which no broadcast is legal
+    huge: dict
+
+
+CASES = (
+    Case(
+        SQL, "o_custkey", "BuildRight",
+        {("lineitem", "orders"): 3}, "BuildLeft",
+        {("lineitem", "orders"): 4_000_000_000, ("customer",): 3_000_000_000},
+    ),
+    Case(
+        NATION_SQL, "c_nationkey", "BuildLeft",
+        {("customer",): 10_000_000}, "BuildRight",
+        {("customer",): 10_000_000, ("nation",): 10_000_000},
+    ),
+    # orders is declared fact-table sized in both, so only the CTE's
+    # injected count decides whether it is broadcast
+    Case(
+        CTE_SQL, "o_custkey", "BuildRight",
+        {("orders",): 1_000_000_000, ("customer",): 10}, "BuildRight",
+        {("orders",): 1_000_000_000, ("customer",): 1_000_000_000},
+    ),
+)
+
 
 @pytest.fixture(scope="module")
 def injector(spark, sf_small):
@@ -35,19 +88,24 @@ def _join_lines(df) -> list[str]:
     return [line.strip() for line in s.splitlines() if "Join" in line]
 
 
-def _top_join(df) -> str:
-    return next(line for line in _join_lines(df) if "o_custkey" in line)
+def _top_join(df, key: str = "o_custkey") -> str:
+    return next(line for line in _join_lines(df) if key in line)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_huge_injection_flips_broadcast_to_sort_merge(spark, injector):
     tables_before = {t.name for t in spark.catalog.listTables()}
-    assert _top_join(spark.sql(SQL)).startswith("+- BroadcastHashJoin")
-    huge = injector.plan(
-        SQL,
-        {("lineitem", "orders"): 4_000_000_000, ("customer",): 3_000_000_000},
-        adaptive=False,
-    )
-    assert _top_join(huge).startswith("+- SortMergeJoin")
+    for case in CASES:
+        assert _top_join(spark.sql(case.sql), case.key).startswith(
+            "+- BroadcastHashJoin"
+        ), case.sql
+        tiny = injector.plan(case.sql, case.tiny, adaptive=False)
+        assert _top_join(tiny, case.key).startswith("+- BroadcastHashJoin"), case.sql
+        huge = injector.plan(case.sql, case.huge, adaptive=False)
+        assert _top_join(huge, case.key).startswith("+- SortMergeJoin"), case.sql
     # zero writes: catalog unchanged, nothing materialized
     assert {t.name for t in spark.catalog.listTables()} == tables_before
 
@@ -55,28 +113,40 @@ def test_huge_injection_flips_broadcast_to_sort_merge(spark, injector):
 def test_tiny_injection_flips_build_side(spark, injector):
     """A 3-row (lineitem ⋈ orders) intermediate must become the broadcast
     build side of the customer join (BuildLeft), instead of customer
-    (the default BuildRight)."""
-    assert "BuildRight" in _top_join(spark.sql(SQL))
-    tiny = injector.plan(SQL, {("lineitem", "orders"): 3}, adaptive=False)
-    assert "BuildLeft" in _top_join(tiny)
+    (the default BuildRight); a 10M-row customer hands the build side to
+    nation. The CTE case keeps its side: the 10-row intermediate is
+    broadcast although orders is declared 1e9 rows."""
+    for case in CASES:
+        assert case.default_build in _top_join(spark.sql(case.sql), case.key)
+        tiny = injector.plan(case.sql, case.tiny, adaptive=False)
+        assert case.tiny_build in _top_join(tiny, case.key), case.sql
 
 
 def test_injected_plans_return_identical_results(spark, injector):
-    base = sorted(tuple(r) for r in spark.sql(SQL).collect())
-    huge = injector.plan(
-        SQL,
-        {("lineitem", "orders"): 4_000_000_000, ("customer",): 3_000_000_000},
-        adaptive=False,
-    )
-    tiny = injector.plan(SQL, {("lineitem", "orders"): 3}, adaptive=False)
-    assert sorted(tuple(r) for r in huge.collect()) == base
-    assert sorted(tuple(r) for r in tiny.collect()) == base
+    for case in CASES:
+        base = _rows(spark.sql(case.sql))
+        assert base, case.sql
+        for cards in (case.tiny, case.huge):
+            assert _rows(injector.plan(case.sql, cards, adaptive=False)) == base
 
 
 def test_injection_does_not_leak_into_fresh_plans(spark, injector):
-    injector.plan(SQL, {("customer",): 3_000_000_000}, adaptive=False)
-    # a brand-new DataFrame for the same SQL must plan with real stats
-    assert _top_join(spark.sql(SQL)).startswith("+- BroadcastHashJoin")
+    for case in CASES:
+        injector.plan(case.sql, case.huge, adaptive=False)
+        # a brand-new DataFrame for the same SQL must plan with real stats
+        fresh = _top_join(spark.sql(case.sql), case.key)
+        assert fresh.startswith("+- BroadcastHashJoin"), case.sql
+        assert case.default_build in fresh, case.sql
+
+
+def test_cte_intermediate_is_an_ordinary_table_set(spark, injector):
+    """A CTE needs no name or rewrite to be injected: after inlining, the
+    plan offers it as the table set it covers."""
+    assert injector.table_sets(CTE_SQL) == [
+        frozenset({"orders#1"}),
+        frozenset({"customer#1"}),
+        frozenset({"orders#1", "customer#1"}),
+    ]
 
 
 def test_visible_row_count_reports_injection(spark, injector):

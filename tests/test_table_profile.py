@@ -16,11 +16,16 @@ the learned correctors built on it. This module pins three things:
    table, a re-plan over rebuilt frames fires none, self-join aliases with
    different filters keep separate entries, and ``clear_table_cache`` or a
    new session starts over.
+
+A fourth check needs no Spark: ``estimate_components`` is bit-identical
+across processes with different string-hash seeds.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,8 +48,9 @@ from postbound_spark.plans.parser import parse_query, to_query_spec
 from postbound_spark.sources.imdb_fixture import IMDB_TABLES
 from postbound_spark.workloads import job_light_shaped_corpus
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JOB_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    REPO,
     "workloads",
     "fixtures",
     "job",
@@ -612,9 +618,10 @@ def test_empty_table_and_no_join_columns(spark, job_base):
 def test_strategy_outputs_match_recorded(spark, planned):
     """UES bounds and orders, dp and pgdp orders and the root estimate
     components equal the recorded per-statistic values on every planned
-    query. ``est``/``prod`` compare to 1e-12: they multiply base counts in
-    frozenset order, which follows the process's string-hash seed, so the
-    last bit of a product beyond 2**53 differs between processes."""
+    query. ``est``/``prod`` compare to 1e-12: they were recorded when the
+    base counts were multiplied in frozenset order, which follows the
+    recording process's string-hash seed, so their last bit may differ
+    from today's sorted-order product."""
     assert set(planned) == set(RECORDED)
     for key, (spec, tables) in planned.items():
         bound, ues_tree, dp_tree, pgdp_tree, comp = RECORDED[key]
@@ -684,3 +691,45 @@ def test_profile_memo_lifetime(spark, job_base, imdb_dir):
     }
     assert plan(other_base) > 0
     assert any(key[0] == "profile" for key in session_memo(other))
+
+
+#: stubs ``_table_stats`` with JOB-sized counts whose float product depends
+#: on the multiplication order, then prints the frozenset iteration order
+#: and the ``prod`` the estimator derives from it
+_SEED_PROBE = """
+import itertools, math
+from postbound_spark.optimizer.cardinalities import StatsCardinalityEstimator
+from postbound_spark.optimizer.stages import QuerySpec
+
+counts = {"mk": 4523930.0, "t": 2528312.0, "ci": 36244344.0,
+          "n": 4167491.0, "cn": 234997.0, "mc": 2609129.0}
+orders = {repr(math.prod(counts[t] for t in p)) for p in itertools.permutations(counts)}
+assert len(orders) > 1, "counts must make the product order-dependent"
+est = StatsCardinalityEstimator()
+est._table_stats = lambda name, df, cols: (counts[name], {})
+spec = QuerySpec(tuple(counts), ())
+got = est.estimate_components(spec, frozenset(counts), dict.fromkeys(counts))
+print(list(frozenset(counts)))
+print(repr(got["prod"]))
+"""
+
+
+def test_estimate_components_is_hash_seed_independent():
+    """The product of base counts is taken in sorted table order, so
+    ``prod`` (and ``est``) cannot follow the frozenset iteration order,
+    which differs between processes with different string-hash seeds."""
+    runs = [
+        subprocess.run(
+            [sys.executable, "-c", _SEED_PROBE],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.splitlines()
+        for seed in ("1", "2", "3", "4")
+    ]
+    # the seeds really do iterate the frozenset differently...
+    assert len({order for order, _prod in runs}) > 1
+    # ...and the product is the same bits under every one of them
+    assert len({prod for _order, prod in runs}) == 1, runs
