@@ -253,8 +253,9 @@ def _plan_order(spark, strategy: str, parsed, spec, tables, context=None):
     )
 
 
-def join_qerrors(df: DataFrame) -> list[dict]:
-    """Per-JOIN q-error of an executed DataFrame: Catalyst's logical
+def join_qerrors(plan) -> list[dict]:
+    """Per-JOIN q-error of an executed DataFrame (or its
+    :class:`~postbound_spark.optimizer.qep.PlanDigest`): Catalyst's logical
     estimate (``stats().rowCount``, or sizeInBytes/row-width when the
     visitor yields no count) against the ``numOutputRows`` actual of the
     matching physical join (ref ``_qep.py:1575`` — the reference computes
@@ -266,24 +267,21 @@ def join_qerrors(df: DataFrame) -> list[dict]:
     in place, which keeps the position), so position is a stable join
     identity even for sources like LocalTableScan that carry no table name.
     Run an action on ``df`` first, or every actual is NaN."""
-    from postbound_spark.optimizer.planstats import _jseq, _row_width_bytes
-    from postbound_spark.optimizer.qep import executed_plan
+    from postbound_spark.optimizer.qep import plan_digest
 
+    digest = plan_digest(plan)
     logical_joins: list[float] = []
 
-    def walk_logical(jnode) -> None:
-        for child in _jseq(jnode.children()):
+    def walk_logical(node) -> None:
+        for child in node.children:
             walk_logical(child)
-        if jnode.nodeName() == "Join":
-            stats = jnode.stats()
-            row_opt = stats.rowCount()
-            if row_opt.isDefined():
-                est = float(int(row_opt.get()))
+        if node.name == "Join":
+            if math.isnan(node.estimated_rows):
+                logical_joins.append(node.size_bytes / node.row_width)
             else:
-                est = float(int(stats.sizeInBytes())) / _row_width_bytes(jnode)
-            logical_joins.append(est)
+                logical_joins.append(node.estimated_rows)
 
-    walk_logical(df._jdf.queryExecution().optimizedPlan())
+    walk_logical(digest.logical)
 
     physical_joins: list[float] = []
 
@@ -293,7 +291,7 @@ def join_qerrors(df: DataFrame) -> list[dict]:
         if "Join" in node.name or node.name == "CartesianProduct":
             physical_joins.append(node.actual_rows)
 
-    walk_physical(executed_plan(df))
+    walk_physical(digest.physical)
 
     if len(logical_joins) != len(physical_joins):
         # AQE can eliminate a join outright (empty-relation propagation)
@@ -355,11 +353,12 @@ def run_optimizer_loop(
     filters learns separate operator recommendations."""
     from postbound_spark.operators.compiler import compile_plan
     from postbound_spark.optimizer.hints import apply_join_hints_to_relalg
-    from postbound_spark.optimizer.qep import observed_join_steps
+    from postbound_spark.optimizer.qep import observed_join_steps, plan_digest
     from postbound_spark.plans.algebra import parse_relalg
     from postbound_spark.plans.parser import parse_query, to_query_spec
 
     context = _MatrixContext(trie_path, tonic_filter_aware)
+    catalog = dict(base_tables)
     rows: list[dict] = []
     for label, sql in queries.items():
         try:
@@ -377,6 +376,7 @@ def run_optimizer_loop(
             warnings.warn(f"{label}: parse/spec extraction failed: {exc}")
             continue
         context.last_tree = None  # TONIC never replays across queries
+        leaves: dict = {}  # filtered leaf frames, shared by the strategies
         for strategy in strategies:
             t0 = time.perf_counter()
             try:
@@ -392,16 +392,18 @@ def run_optimizer_loop(
             tree = parse_relalg(parsed, join_order=order) if order else parse_relalg(parsed)
             if assignment is not None:
                 tree = apply_join_hints_to_relalg(tree, assignment)
-            df = compile_plan(tree, spark)
+            df = compile_plan(tree, spark, catalog=catalog, leaves=leaves)
             t1 = time.perf_counter()
             result = df.collect()
             exec_time = time.perf_counter() - t1
+            # one plan read feeds the TONIC filing and the q-errors
+            digest = plan_digest(df)
             if jointree is not None and strategy != "tonic":
                 # file this execution into the QEP-S trie: positional
                 # pairing of the forced tree's joins with the executed
                 # physical joins (the join_qerrors invariant) gives
                 # alias-keyed (operator, cost) even across self-joins
-                steps = observed_join_steps(df)
+                steps = observed_join_steps(digest)
                 tree_joins = list(jointree.joins())
                 if len(steps) == len(tree_joins):
                     operators = {}
@@ -433,7 +435,7 @@ def run_optimizer_loop(
                 if isinstance(value, (int, float)) and not isinstance(value, bool):
                     actual = float(value)
             try:
-                pairs = join_qerrors(df)
+                pairs = join_qerrors(digest)
             except ValueError as exc:  # runtime plan rewrite → no pairing
                 warnings.warn(f"{label}/{strategy}: {exc}")
                 pairs = []

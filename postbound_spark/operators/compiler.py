@@ -177,9 +177,14 @@ class _Compiler(ra.RelNodeVisitor):
         catalog: dict[str, DataFrame] | None,
         selection=None,
         materialized_memo: dict | None = None,
+        leaves: dict | None = None,
     ):
         self.spark = spark
         self.catalog = catalog or {}
+        #: optional caller-owned memo of filtered base-table leaves
+        #: (Selection over a named Relation), keyed by node value: the
+        #: plans a caller compiles for one query share each leaf frame
+        self._leaves = leaves
         #: optional per-join build-side policy (e.g. MeasuredJoinPolicy) —
         #: the PhysicalOperatorSelection hook of the compile path; explicit
         #: node hints always win over the policy
@@ -260,7 +265,17 @@ class _Compiler(ra.RelNodeVisitor):
 
     # --- unary ------------------------------------------------------------
     def visit_selection(self, node: ra.Selection) -> DataFrame:
-        return self._compile(node.child).filter(_expr(node.predicate))
+        leaf = (
+            self._leaves is not None
+            and isinstance(node.child, ra.Relation)
+            and node.child.table is not None
+        )
+        if leaf and node in self._leaves:
+            return self._leaves[node]
+        df = self._compile(node.child).filter(_expr(node.predicate))
+        if leaf:
+            self._leaves[node] = df
+        return df
 
     def visit_projection(self, node: ra.Projection) -> DataFrame:
         return self._compile(node.child).select(*(_expr(c) for c in node.columns))
@@ -627,6 +642,7 @@ def compile_plan(
     selection=None,
     materialized_out: list[DataFrame] | None = None,
     materialized_memo: dict | None = None,
+    leaves: dict | None = None,
 ) -> DataFrame:
     """Compile ``node`` to a DataFrame. ``catalog`` maps table names to
     DataFrames; missing names fall back to ``spark.table`` (temp views).
@@ -646,7 +662,14 @@ def compile_plan(
     across compile_plan calls (value-keyed Materialize nodes): identical
     CTEs in later statements reuse the cached frame — the multi-action
     case where ``cache()`` actually pays. The memo's owner is
-    responsible for unpersisting (the facade's ``release()``)."""
+    responsible for unpersisting (the facade's ``release()``).
+
+    ``leaves``, if given, memoizes each filtered base-table leaf (a
+    Selection directly over a named Relation) by node value across
+    compile_plan calls: a caller compiling several plans of ONE query
+    (the optimizer loop's strategies) builds each leaf frame once. The
+    frames depend on ``catalog``, so keep one memo per query and
+    catalog."""
     bind = getattr(selection, "bind_root", None)
     if bind is not None:
         # pruning-aware build-side widths: the policy sizes each side at
@@ -654,7 +677,7 @@ def compile_plan(
         # the broadcast relation will actually store after Catalyst's
         # column pruning), which needs the whole plan, not just the join
         bind(node)
-    compiler = _Compiler(spark, catalog, selection, materialized_memo)
+    compiler = _Compiler(spark, catalog, selection, materialized_memo, leaves)
     df = compiler._compile(node)
     if materialized_out is not None:
         materialized_out.extend(compiler._materialized.values())

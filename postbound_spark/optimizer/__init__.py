@@ -34,10 +34,12 @@ from postbound_spark.optimizer.hints import (
 from postbound_spark.optimizer.joingraph import JoinEdge, JoinGraph, pk_fk_edges_for
 from postbound_spark.optimizer.jointree import JoinTree
 from postbound_spark.optimizer.qep import (
+    PlanDigest,
     PlanNode,
     executed_plan,
     join_order_signature,
     optimized_plan,
+    plan_digest,
 )
 from postbound_spark.optimizer.stages import (
     CardinalityEstimator,
@@ -105,6 +107,7 @@ __all__ = [
     "OptimizationPreCheck",
     "PhysicalOperatorAssignment",
     "PhysicalOperatorSelection",
+    "PlanDigest",
     "PlanNode",
     "PlannedQuery",
     "PlanParameterization",
@@ -124,6 +127,7 @@ __all__ = [
     "optimized_plan",
     "pk_fk_edges_for",
     "plan_diff",
+    "plan_digest",
     "possible_plans_bound",
     "random_bushy_join_order",
     "training_samples_from_intermediates",

@@ -141,25 +141,27 @@ _HELPER_CACHE = weakref.WeakKeyDictionary()
 _ACTIVE_INJECTORS = weakref.WeakKeyDictionary()
 
 
-def _load_helper(spark: SparkSession):
-    """Load the compiled helper into the live driver JVM via a
+def load_helper(spark: SparkSession):
+    """The compiled helper, loaded into the live driver JVM via a
     URLClassLoader child of Spark's context classloader (parent-first, so
-    every Catalyst type resolves from Spark's own loader).
+    every Catalyst type resolves from Spark's own loader). Loading does
+    not register the planning strategy: the plan digest
+    (:func:`postbound_spark.optimizer.qep.plan_digest`) uses the helper on
+    sessions that never inject, and only
+    :class:`PlanTimeCardinalityInjector` registers it.
 
     One helper instance per JVM: py4j's reflection engine caches Method
     objects by class NAME, so two copies of the class from separate
     URLClassLoaders poison each other's dispatch ("object is not an
-    instance of declaring class") — every injector on a session shares
-    the singleton."""
+    instance of declaring class") — every injector and digest on a
+    session shares the singleton."""
     key = spark.sparkContext._gateway
-    if key in _HELPER_CACHE:
-        helper = _HELPER_CACHE[key]
-        helper.register(spark._jsparkSession.experimental())
+    helper = _HELPER_CACHE.get(key)
+    if helper is not None:
         return helper
     classes_dir = ensure_helper_compiled()
     jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-    urls = gw.new_array(jvm.java.net.URL, 1)
+    urls = key.new_array(jvm.java.net.URL, 1)
     urls[0] = jvm.java.io.File(classes_dir).toURI().toURL()
     parent = jvm.Thread.currentThread().getContextClassLoader()
     loader = jvm.java.net.URLClassLoader(urls, parent)
@@ -167,12 +169,8 @@ def _load_helper(spark: SparkSession):
     # Class.newInstance() is deprecated since Java 9 (and rethrows checked
     # exceptions unguarded) — go through the explicit no-arg Constructor,
     # passing py4j-built empty arrays for both varargs parameters
-    ctor = cls.getDeclaredConstructor(gw.new_array(jvm.java.lang.Class, 0))
-    helper = ctor.newInstance(gw.new_array(jvm.java.lang.Object, 0))
-    # the helper doubles as a planning strategy that re-seeds statsCache
-    # from tags on the CLONED plan every pass (QueryExecution.sparkPlan
-    # clones the optimized plan, which wipes caches but keeps tags)
-    helper.register(spark._jsparkSession.experimental())
+    ctor = cls.getDeclaredConstructor(key.new_array(jvm.java.lang.Class, 0))
+    helper = ctor.newInstance(key.new_array(jvm.java.lang.Object, 0))
     _HELPER_CACHE[key] = helper
     return helper
 
@@ -297,7 +295,12 @@ class PlanTimeCardinalityInjector:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._helper = _load_helper(spark)
+        self._helper = load_helper(spark)
+        # the helper doubles as a planning strategy that re-seeds
+        # statsCache from tags on the CLONED plan every pass
+        # (QueryExecution.sparkPlan clones the optimized plan, which wipes
+        # caches but keeps tags)
+        self._helper.register(spark._jsparkSession.experimental())
         self._tagged: list = []  # optimized plans we tagged (for close())
         self._closed = False
         _ACTIVE_INJECTORS.setdefault(self.spark, weakref.WeakSet()).add(self)
@@ -313,7 +316,7 @@ class PlanTimeCardinalityInjector:
         when this is the LAST live injector on THIS session, deregister
         the shared planning strategy from this session's
         ExperimentalMethods. The strategy object is one singleton per JVM
-        (see ``_load_helper``) but its registration is per-session, so the
+        (see :func:`load_helper`) but its registration is per-session, so the
         last-user check is scoped per session: closing the last injector
         on session A must deregister A's copy even while session B (same
         gateway) still has live injectors, and must NOT touch B's

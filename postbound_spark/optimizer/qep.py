@@ -13,16 +13,24 @@ Mirrors the reference's ``QueryPlan`` artifact (rbergm/PostBOUND
   (``numOutputRows``), giving per-node q-error exactly like the
   reference's EXPLAIN ANALYZE round-trip (``postgres.py:3954``).
 
-Implementation note: we traverse the JVM plan tree through py4j (node
-name, children, stats) instead of parsing ``explain()`` text — stable
-against formatting changes, and it exposes the real objects.
+Implementation note: both plans of an execution arrive in ONE call into
+the compiled JVM helper (``jvm/PlanStatsInjector.java``, loaded by
+:func:`~postbound_spark.optimizer.planstats.load_helper`), as a
+:class:`PlanDigest` of post-order node lists: per logical node the name,
+Catalyst's ``rowCount`` and ``sizeInBytes`` as exact decimal strings and
+the row width; per physical node (AQE wrappers unwrapped) the name,
+``numOutputRows`` and the base table a scan reads, resolved from the
+relation itself. Every reader below consumes that digest, so reading an
+executed plan costs one py4j round trip, not one per node and field.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import math
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 
@@ -36,6 +44,8 @@ class PlanNode:
     estimated_rows: float = math.nan  # NaN = unknown (ref Cardinality NaN state)
     actual_rows: float = math.nan
     size_bytes: float = math.nan
+    row_width: int = 0  # logical nodes: Catalyst's bytes per output row
+    table: str | None = None  # physical scans: the base table read
 
     # -- reference plan utilities (_qep.py:1276-1793) ----------------------
 
@@ -97,110 +107,105 @@ class PlanNode:
         return "\n".join(lines)
 
 
-def _jseq(scala_seq) -> list:
-    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+class PlanDigest:
+    """Both plans of one DataFrame's ``QueryExecution``, read from the JVM
+    in one call on first use (so run the action first: the physical
+    plan's ``numOutputRows`` actuals are read with it). Every reader of
+    this module accepts a digest in place of the DataFrame, which lets a
+    caller that asks several questions about one execution pay for one
+    read. ``physical=False`` reads the logical plan alone, which never
+    forces physical planning of a query that has not run."""
 
+    def __init__(self, df: DataFrame, physical: bool = True):
+        self.df = df
+        self._with_physical = physical
 
-def _jnum(value) -> float:
-    """py4j returns scala.math.BigInt either as a JavaObject or already
-    auto-converted to a Python int — normalize both to float."""
-    if isinstance(value, (int, float)):
-        return float(value)
-    return float(value.toString())
+    @cached_property
+    def _trees(self) -> tuple[PlanNode, PlanNode | None]:
+        from postbound_spark.optimizer.planstats import load_helper
 
-
-def _node_estimates(jnode) -> tuple[float, float]:
-    """(estimated_rows, size_bytes) from a logical plan node's Catalyst
-    statistics. Every logical plan node has ``stats()``; a failure here
-    means a malformed/foreign node, which degrades to NaN but is LOGGED —
-    a plan whose nodes silently vanish from introspection once cost round 2
-    a debugging session (verdict r2 wrong-list #4)."""
-    try:
-        stats = jnode.stats()
-        size = _jnum(stats.sizeInBytes())
-        row_opt = stats.rowCount()
-        est = _jnum(row_opt.get()) if row_opt.isDefined() else math.nan
-        return est, size
-    except Exception as exc:
-        logger.warning(
-            "plan introspection: stats() unreadable on node %s (%s); "
-            "recording NaN estimates",
-            _safe_name(jnode), exc,
+        helper = load_helper(self.df.sparkSession)
+        qe = self.df._jdf.queryExecution()
+        raw = json.loads(helper.digest(qe, self._with_physical))
+        physical = raw["physical"]
+        return (
+            _tree(raw["logical"], _logical_node),
+            None if physical is None else _tree(physical, _physical_node),
         )
-        return math.nan, math.nan
+
+    @property
+    def logical(self) -> PlanNode:
+        """The optimized logical plan with Catalyst's estimates."""
+        return self._trees[0]
+
+    @property
+    def physical(self) -> PlanNode:
+        """The executed physical plan with its ``numOutputRows`` actuals."""
+        if not self._with_physical:
+            raise ValueError("this digest was read without the physical plan")
+        return self._trees[1]
 
 
-def _safe_name(jnode) -> str:
-    try:
-        return str(jnode.nodeName())
-    except Exception:
-        return f"<unnameable {type(jnode).__name__}>"
+def plan_digest(plan: DataFrame | PlanDigest) -> PlanDigest:
+    """The :class:`PlanDigest` of ``plan`` (a digest passes through)."""
+    return plan if isinstance(plan, PlanDigest) else PlanDigest(plan)
 
 
-def optimized_plan(df: DataFrame) -> PlanNode:
+def _tree(nodes: list, build) -> PlanNode:
+    """Rebuild a post-order ``[name, arity, ...]`` node list as a tree."""
+    stack: list[PlanNode] = []
+    for name, arity, *fields in nodes:
+        children = stack[len(stack) - arity:]
+        del stack[len(stack) - arity:]
+        stack.append(build(name, children, *fields))
+    (root,) = stack
+    return root
+
+
+def _logical_node(name, children, rows, size, width) -> PlanNode:
+    if size is None:
+        logger.warning(
+            "plan introspection: stats() unreadable on node %s; recording "
+            "NaN estimates", name,
+        )
+    return PlanNode(
+        name=name,
+        children=children,
+        estimated_rows=math.nan if rows is None else float(int(rows)),
+        size_bytes=math.nan if size is None else float(int(size)),
+        row_width=width,
+    )
+
+
+def _physical_node(name, children, rows, table) -> PlanNode:
+    if rows == "unreadable":
+        logger.warning(
+            "plan introspection: metrics unreadable on node %s; recording "
+            "NaN actuals", name,
+        )
+        rows = None
+    return PlanNode(
+        name=name,
+        children=children,
+        actual_rows=math.nan if rows is None else float(rows),
+        table=table,
+    )
+
+
+def optimized_plan(plan: DataFrame | PlanDigest) -> PlanNode:
     """Catalyst's optimized logical plan with rowCount/sizeInBytes
-    estimates attached."""
-
-    def convert(jnode) -> PlanNode:
-        est, size = _node_estimates(jnode)
-        return PlanNode(
-            name=jnode.nodeName(),
-            children=[convert(c) for c in _jseq(jnode.children())],
-            estimated_rows=est,
-            size_bytes=size,
-        )
-
-    return convert(df._jdf.queryExecution().optimizedPlan())
+    estimates attached (a DataFrame is not planned physically)."""
+    if isinstance(plan, PlanDigest):
+        return plan.logical
+    return PlanDigest(plan, physical=False).logical
 
 
-def executed_plan(df: DataFrame) -> PlanNode:
-    """Physical plan; after an action has run, ``numOutputRows`` metrics
-    populate ``actual_rows`` (the EXPLAIN ANALYZE analog). Call
-    ``df.collect()`` (or any action) first for actuals."""
-
-    def convert(jnode) -> PlanNode:
-        # unwrap AQE containers: AdaptiveSparkPlanExec holds the (re-planned)
-        # physical tree in executedPlan(); query-stage nodes wrap theirs in
-        # plan(). Without this the tree appears as a single opaque root.
-        name = jnode.nodeName()
-        if name == "AdaptiveSparkPlan":
-            return convert(jnode.executedPlan())
-        if name.endswith("QueryStage"):
-            return convert(jnode.plan())
-        return PlanNode(
-            name=name,
-            children=[convert(c) for c in _jseq(jnode.children())],
-            actual_rows=_node_actual_rows(jnode),
-        )
-
-    qe = df._jdf.queryExecution()
-    try:
-        # executedPlan may wrap an AQE root whose final plan lazily resolves
-        return convert(qe.executedPlan())
-    except Exception as exc:
-        logger.info(
-            "plan introspection: executedPlan unavailable (%s); falling back "
-            "to the pre-AQE sparkPlan", exc,
-        )
-        return convert(qe.sparkPlan())
-
-
-def _node_actual_rows(jnode) -> float:
-    """``numOutputRows`` from a physical node's SQL metrics. Missing metric
-    (common: not every operator reports rows) is a quiet NaN; an ERROR
-    reading the metrics map is logged before degrading."""
-    try:
-        metrics = jnode.metrics()
-        if metrics.contains("numOutputRows"):
-            return float(metrics.apply("numOutputRows").value())
-        return math.nan
-    except Exception as exc:
-        logger.warning(
-            "plan introspection: metrics unreadable on node %s (%s); "
-            "recording NaN actuals",
-            _safe_name(jnode), exc,
-        )
-        return math.nan
+def executed_plan(plan: DataFrame | PlanDigest) -> PlanNode:
+    """Physical plan (AQE containers unwrapped); after an action has run,
+    ``numOutputRows`` metrics populate ``actual_rows`` (the EXPLAIN
+    ANALYZE analog). Call ``df.collect()`` (or any action) first for
+    actuals."""
+    return plan_digest(plan).physical
 
 
 def join_order_signature(df: DataFrame) -> str:
@@ -239,49 +244,25 @@ _JOIN_NODE_TO_OPERATOR = {
 }
 
 
-def _physical_tree_with_tables(df: DataFrame):
-    """Walk the executed physical plan, resolving scan leaves to table
-    names via the parquet file path in the scan's description."""
-    import re
-
-    table_re = re.compile(r"(\w+)\.parquet")
-
-    def convert(jnode):
-        name = jnode.nodeName()
-        if name == "AdaptiveSparkPlan":
-            return convert(jnode.executedPlan())
-        if name.endswith("QueryStage"):
-            return convert(jnode.plan())
-        if "Scan" in name or "Relation" in name:
-            m = table_re.search(jnode.toString().splitlines()[0])
-            if m is None and "InMemory" in name:
-                # cached tables (persist/prewarm) hide the file path behind
-                # an InMemoryTableScan; the cached plan still carries it
-                try:
-                    m = table_re.search(jnode.relation().cachedPlan().toString())
-                except Exception as exc:  # malformed/foreign cached plan
-                    logger.warning(
-                        "cached-plan table-name recovery failed for %s: %s "
-                        "(falling back to the node name)", name, exc
-                    )
-                    m = None
-            return ("scan", m.group(1) if m else name, [])
-        return (name, None, [convert(c) for c in _jseq(jnode.children())])
-
-    return convert(df._jdf.queryExecution().executedPlan())
+def _scan_table(node: PlanNode) -> str | None:
+    """Table name of a physical scan leaf (the base table the digest
+    resolved, else the node name); None for any other node."""
+    if "Scan" in node.name or "Relation" in node.name:
+        return node.table or node.name
+    return None
 
 
-def jointree_from_plan(df: DataFrame) -> "JoinTree":
+def jointree_from_plan(plan: DataFrame | PlanDigest) -> "JoinTree":
     """ref _hints.py:1766 — the join order Catalyst chose, as a JoinTree
     (left/outer child = Spark's left side = probe/stream side)."""
     from postbound_spark.optimizer.jointree import JoinTree
 
-    def build(node) -> JoinTree | None:
-        kind, table, children = node
-        if kind == "scan":
+    def build(node: PlanNode) -> JoinTree | None:
+        table = _scan_table(node)
+        if table is not None:
             return JoinTree.leaf(table)
-        subtrees = [t for t in (build(c) for c in children) if t is not None]
-        if any(j in kind for j in _JOIN_NODE_TO_OPERATOR) and len(subtrees) == 2:
+        subtrees = [t for t in (build(c) for c in node.children) if t is not None]
+        if any(j in node.name for j in _JOIN_NODE_TO_OPERATOR) and len(subtrees) == 2:
             return JoinTree.join(subtrees[0], subtrees[1])
         if not subtrees:
             return None
@@ -293,13 +274,13 @@ def jointree_from_plan(df: DataFrame) -> "JoinTree":
             out = JoinTree.join(out, s)
         return out
 
-    tree = build(_physical_tree_with_tables(df))
+    tree = build(executed_plan(plan))
     if tree is None:
         raise ValueError("plan contains no recognizable scans")
     return tree
 
 
-def operators_from_plan(df: DataFrame) -> dict[frozenset, "JoinOperator"]:
+def operators_from_plan(plan: DataFrame | PlanDigest) -> dict[frozenset, "JoinOperator"]:
     """ref _hints.py:1838 — {joined-table-set: physical join operator}
     read off the executed plan; feed into PhysicalOperatorAssignment to
     replay this exact plan via hints."""
@@ -307,28 +288,31 @@ def operators_from_plan(df: DataFrame) -> dict[frozenset, "JoinOperator"]:
 
     out: dict[frozenset, JoinOperator] = {}
 
-    def tables_below(node) -> frozenset:
-        kind, table, children = node
-        if kind == "scan":
+    def tables_below(node: PlanNode) -> frozenset:
+        table = _scan_table(node)
+        if table is not None:
             return frozenset({table})
-        return frozenset().union(*(tables_below(c) for c in children)) if children else frozenset()
+        return frozenset().union(*(tables_below(c) for c in node.children))
 
-    def walk(node):
-        kind, _, children = node
+    def walk(node: PlanNode) -> None:
+        # pre-order, so a nested join with the same table set as its
+        # ancestor (a side without scans) overwrites the ancestor's entry
+        if _scan_table(node) is not None:
+            return
         for prefix, op_name in _JOIN_NODE_TO_OPERATOR.items():
-            if prefix in kind:
+            if prefix in node.name:
                 key = tables_below(node)
                 if key:
                     out[key] = JoinOperator[op_name]
                 break
-        for c in children:
+        for c in node.children:
             walk(c)
 
-    walk(_physical_tree_with_tables(df))
+    walk(executed_plan(plan))
     return out
 
 
-def observed_join_steps(df: DataFrame) -> list[tuple["JoinOperator", float]]:
+def observed_join_steps(plan: DataFrame | PlanDigest) -> list[tuple["JoinOperator", float]]:
     """Post-order (physical join operator, actual output rows) per join of
     the EXECUTED plan — the training signal the TONIC loop files into its
     QEP-S trie (operator used + cardinality-as-cost).
@@ -353,5 +337,5 @@ def observed_join_steps(df: DataFrame) -> list[tuple["JoinOperator", float]]:
                 steps.append((JoinOperator[op_name], node.actual_rows))
                 break
 
-    walk(executed_plan(df))
+    walk(executed_plan(plan))
     return steps

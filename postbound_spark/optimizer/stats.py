@@ -14,8 +14,9 @@ and caches them; *native* mode reads the backend's own stats. Here:
 
 The join-ordering stages read one :func:`table_profile` per filtered
 base table instead: row count, HLL distinct count and exact max
-frequency of every join column from a single Spark action, memoized on
-the session. ``max_frequency`` is the statistic the UES optimizer needs
+frequency of every join column, memoized on the session.
+:func:`table_profiles` computes all of a query's cold tables with a
+single Spark action. ``max_frequency`` is the statistic the UES optimizer needs
 (ref: ``opt/ues.py:300`` MaxFrequencyStats) — the highest duplication
 factor of any value in a join column; the distinct counts feed the
 System-R estimates of the DP enumerators.
@@ -24,6 +25,8 @@ System-R estimates of the DP enumerators.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,51 +58,84 @@ class TableProfile:
 def table_profile(df: DataFrame, cols: tuple[str, ...] = ()) -> TableProfile:
     """The :class:`TableProfile` of ``df`` over the join columns ``cols``,
     from one Spark action on first use and from the session memo
-    (:func:`postbound_spark.catalog.session_memo`) after that.
+    (:func:`postbound_spark.catalog.session_memo`) after that: the
+    one-item case of :func:`table_profiles`."""
+    return table_profiles([(df, cols)])[0]
+
+
+def table_profiles(
+    items: Iterable[tuple[DataFrame, tuple[str, ...]]],
+) -> list[TableProfile]:
+    """The :class:`TableProfile` of every ``(frame, join columns)`` item,
+    in order. Items the session memo already holds cost no job; every
+    other one is computed by ONE Spark action over the union of their
+    per-table aggregates, so a query's cold statistics cost one action,
+    not one per table (Spark runs the union's independent stages side by
+    side). Items of one query share one session.
 
     The memo key is the frame's semantic hash, and a hit is confirmed
     with ``sameSemantics``: frames rebuilt by later queries, strategies
     and loop runs share an entry, while the same table under two filters
-    (a self-join's aliases) gets two. Object identity would die with each
+    (a self-join's aliases) gets two. Frames with the same semantics in
+    one call are computed once. Object identity would die with each
     rebuilt frame, and a plan string is truncated by
     ``spark.sql.debug.maxToStringFields``. The entry lives as long as the
     session; :func:`postbound_spark.catalog.clear_table_cache` drops it."""
-    cols = tuple(sorted(set(cols)))
-    entries = session_memo(df.sparkSession).setdefault(
-        ("profile", df.semanticHash(), cols), []
-    )
-    for seen, profile in entries:
-        if df.sameSemantics(seen):
-            return profile
-    profile = _profile_pass(df, cols)
-    entries.append((df, profile))
-    return profile
+    out: list[TableProfile | None] = []
+    # (frame, cols, memo entries, output positions) per distinct miss
+    misses: list[tuple[DataFrame, tuple[str, ...], list, list[int]]] = []
+    for i, (df, cols) in enumerate(items):
+        cols = tuple(sorted(set(cols)))
+        entries = session_memo(df.sparkSession).setdefault(
+            ("profile", df.semanticHash(), cols), []
+        )
+        out.append(next((p for seen, p in entries if df.sameSemantics(seen)), None))
+        if out[i] is not None:
+            continue
+        same = next(
+            (m for m in misses if m[2] is entries and df.sameSemantics(m[0])), None
+        )
+        if same is not None:
+            same[3].append(i)
+        else:
+            misses.append((df, cols, entries, [i]))
+    if misses:
+        parts = [_profile_row(k, df, cols) for k, (df, cols, _e, _i) in enumerate(misses)]
+        for row in reduce(DataFrame.union, parts).collect():
+            df, cols, entries, positions = misses[row["k"]]
+            profile = TableProfile(
+                row_count=int(row["rows"] or 0),
+                distinct_counts={c: int(n) for c, n in zip(cols, row["ndv"])},
+                max_frequencies={c: int(f or 0) for c, f in zip(cols, row["mf"])},
+            )
+            entries.append((df, profile))
+            for i in positions:
+                out[i] = profile
+    return out
 
 
-def _profile_pass(df: DataFrame, cols: tuple[str, ...]) -> TableProfile:
+def _profile_row(k: int, df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
     """One grouping-sets pass — a group per value of each column plus the
-    grand total — then one global aggregate over the groups: the total's
-    count is the row count, each column's largest group its max
-    frequency. HLL registers depend only on the set of distinct values,
-    so the sketch over the grouped rows equals the sketch over the raw
-    rows (other grouping sets carry the column as NULL, which the sketch
-    skips). An empty input yields no groups at all, hence the defaults."""
+    grand total — then one global aggregate over the groups, as the row
+    ``(k, rows, mf, ndv)``: the total's count is the row count, each
+    column's largest group its max frequency. HLL registers depend only
+    on the set of distinct values, so the sketch over the grouped rows
+    equals the sketch over the raw rows (other grouping sets carry the
+    column as NULL, which the sketch skips). An empty input yields no
+    groups at all, hence NULL rows and max frequencies (read as 0)."""
     m = len(cols)
     total = (1 << m) - 1  # grouping_id of the empty set: every bit rolled up
     gid, n = F.col("__gid"), F.col("__n")
     groups = df.groupingSets([[c] for c in cols] + [[]], *cols).agg(
         F.count(F.lit(1)).alias("__n"), F.grouping_id().alias("__gid")
     )
-    aggs = [F.max(F.when(gid == total, n)).alias("__rows")]
-    for i, c in enumerate(cols):
-        only_c = total ^ (1 << (m - 1 - i))
-        aggs.append(F.max(F.when(gid == only_c, n)).alias(f"__mf_{i}"))
-        aggs.append(F.approx_count_distinct(c).alias(f"__ndv_{i}"))
-    row = groups.agg(*aggs).collect()[0]
-    return TableProfile(
-        row_count=int(row["__rows"] or 0),
-        distinct_counts={c: int(row[f"__ndv_{i}"]) for i, c in enumerate(cols)},
-        max_frequencies={c: int(row[f"__mf_{i}"] or 0) for i, c in enumerate(cols)},
+    mf = [F.max(F.when(gid == total ^ (1 << (m - 1 - i)), n)) for i in range(m)]
+    ndv = [F.approx_count_distinct(c) for c in cols]
+    return groups.agg(
+        F.lit(k).alias("k"),
+        F.max(F.when(gid == total, n)).cast("bigint").alias("rows"),
+        F.array(*mf).cast("array<bigint>").alias("mf"),
+        F.array(*ndv).cast("array<bigint>").alias("ndv"),
     )
 
 

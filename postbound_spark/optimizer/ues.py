@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from postbound_spark.optimizer.joingraph import JoinEdge
 from postbound_spark.optimizer.jointree import JoinTree
 from postbound_spark.optimizer.stages import JoinOrderOptimization, QuerySpec
-from postbound_spark.optimizer.stats import table_profile
+from postbound_spark.optimizer.stats import table_profiles
 
 __all__ = [
     "UESJoinOrderOptimizer",
@@ -74,13 +74,16 @@ class MaxFrequencyStatsContainer:
         count and the max frequency of every join column (ref
         ``_inflate_base_table_estimates`` :242, ``_inflate_attribute_
         frequencies`` :321 — the MCV top-1 count IS the max frequency).
-        :func:`~postbound_spark.optimizer.stats.table_profile` computes a
-        table's profile in one Spark action and the session memo serves
-        it to the DP estimators and every later plan of the same table."""
+        :func:`~postbound_spark.optimizer.stats.table_profiles` computes
+        the profiles of all the spec's tables in one Spark action and the
+        session memo serves them to the DP estimators and every later plan
+        of the same tables."""
         rows: dict[str, float] = {}
         freq: dict[tuple[str, str], float] = {}
-        for t in spec.tables:
-            profile = table_profile(tables[t], spec.join_columns(t))
+        profiles = table_profiles(
+            [(tables[t], spec.join_columns(t)) for t in spec.tables]
+        )
+        for t, profile in zip(spec.tables, profiles):
             rows[t] = float(profile.row_count)
             for col, f in profile.max_frequencies.items():
                 freq[(t, col)] = float(f)

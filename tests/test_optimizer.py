@@ -1007,28 +1007,21 @@ def test_planned_query_enforces_injected_parameters(spec, tdfs):
 
 
 def test_malformed_plan_node_degrades_loudly(caplog):
-    """A plan node whose stats()/metrics() blow up degrades to NaN
-    estimates but LOGS the failure (closing the silent bare-except paths
-    flagged in round 2) instead of vanishing from introspection."""
+    """A plan node whose stats()/metrics() blow up JVM-side reaches the
+    plan digest without estimates or with its actuals marked unreadable;
+    it degrades to NaN but LOGS the failure (closing the silent
+    bare-except paths flagged in round 2) instead of vanishing from
+    introspection."""
     import logging
     import math
 
-    from postbound_spark.optimizer.qep import _node_actual_rows, _node_estimates
-
-    class BrokenNode:
-        def nodeName(self):
-            return "BrokenExec"
-
-        def stats(self):
-            raise RuntimeError("malformed stats")
-
-        def metrics(self):
-            raise RuntimeError("malformed metrics")
+    from postbound_spark.optimizer.qep import _logical_node, _physical_node
 
     with caplog.at_level(logging.WARNING, logger="postbound_spark.optimizer.qep"):
-        est, size = _node_estimates(BrokenNode())
-        actual = _node_actual_rows(BrokenNode())
-    assert math.isnan(est) and math.isnan(size) and math.isnan(actual)
+        logical = _logical_node("BrokenExec", [], None, None, 8)
+        physical = _physical_node("BrokenExec", [], "unreadable", None)
+    assert math.isnan(logical.estimated_rows) and math.isnan(logical.size_bytes)
+    assert math.isnan(physical.actual_rows)
     messages = " ".join(r.message for r in caplog.records)
     assert "stats() unreadable" in messages and "BrokenExec" in messages
     assert "metrics unreadable" in messages

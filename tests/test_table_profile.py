@@ -8,7 +8,9 @@ the learned correctors built on it. This module pins three things:
 1. the one-pass profile returns exactly what the per-statistic calls
    return, on every filtered base table the JOB and JOB-light suites plan,
    and on the empty-table and no-join-column edges where a grouping-sets
-   rewrite could diverge from a global aggregate;
+   rewrite could diverge from a global aggregate; the batched
+   ``table_profiles`` (every miss of a batch in one action) returns what
+   the one-item calls return, on the same tables and edges;
 2. the strategy outputs — UES root bounds and orders, the dp and pgdp join
    orders and the root ``estimate_components`` — equal the values recorded
    from the per-statistic implementation it replaced (``RECORDED``);
@@ -42,7 +44,12 @@ from postbound_spark.optimizer.dynprog import DynamicProgrammingEnumerator
 from postbound_spark.optimizer.joingraph import JoinEdge
 from postbound_spark.optimizer.pgdp import PostgresStyleDynProg
 from postbound_spark.optimizer.stages import QuerySpec
-from postbound_spark.optimizer.stats import EmulatedStatistics, table_profile
+from postbound_spark.optimizer.stats import (
+    EmulatedStatistics,
+    TableProfile,
+    table_profile,
+    table_profiles,
+)
 from postbound_spark.optimizer.ues import UESJoinOrderOptimizer
 from postbound_spark.plans.parser import parse_query, to_query_spec
 from postbound_spark.sources.imdb_fixture import IMDB_TABLES
@@ -613,6 +620,38 @@ def test_empty_table_and_no_join_columns(spark, job_base):
     bare = table_profile(title.filter("t.production_year > 2000"))
     assert bare.row_count == title.filter("t.production_year > 2000").count()
     assert bare.max_frequencies == {} and bare.distinct_counts == {}
+
+
+def test_batched_profiles_equal_one_item_calls(spark, planned, job_base):
+    """``table_profiles`` computes every memo miss of a batch in one Spark
+    action over a union of per-table aggregates. Its profiles equal the
+    one-item calls on every filtered base table of the planned queries and
+    on the edges: the empty table, a table with no join column, and two
+    aliases of one table under one filter, which are computed once."""
+    title = job_base["title"]
+    empty = job_base["movie_keyword"].alias("mk").filter("1=0")
+    bare = title.alias("t").filter("t.production_year > 2000")
+    t1 = title.alias("t1").filter("t1.kind_id = 1")
+    t2 = title.alias("t2").filter("t2.kind_id = 1")
+    items = [
+        (tables[t], spec.join_columns(t))
+        for spec, tables in planned.values()
+        for t in spec.tables
+    ]
+    items += [(empty, ("keyword_id", "movie_id")), (bare, ()), (t1, ("id",)), (t2, ("id",))]
+
+    clear_table_cache(spark)
+    batched = table_profiles(items)
+    assert batched[-1] is batched[-2]  # one filter, two aliases: one entry
+    assert batched[-4] == table_profile(empty, ("keyword_id", "movie_id"))
+    assert batched[-4].row_count == 0
+    assert batched[-4].max_frequencies == {"keyword_id": 0, "movie_id": 0}
+    assert batched[-4].distinct_counts == {"keyword_id": 0, "movie_id": 0}
+    assert batched[-3] == TableProfile(bare.count(), {}, {})
+    assert table_profiles(items) == batched  # all hits now
+
+    clear_table_cache(spark)
+    assert [table_profile(df, cols) for df, cols in items] == batched
 
 
 def test_strategy_outputs_match_recorded(spark, planned):
