@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from postbound_spark.functions.exprcache import expr_memo
 from postbound_spark.plans import relalg as ra
 
 
@@ -150,11 +151,13 @@ def _to_spark_ansi_literals(text: str) -> str:
     return "".join(out)
 
 
+@expr_memo
 def _expr(text: str):
     """``F.expr`` over IR expression text (applies the array-literal,
     length-less-character-type, and ANSI-literal spelling conversions —
     the Spark-dialect gaps in the IR's otherwise ANSI expression
-    surface)."""
+    surface). Memoized on the text, so recompiling a plan reuses its
+    Columns instead of a JVM parse call per expression."""
     return F.expr(
         _to_spark_chartypes(
             _to_spark_array_calls(_to_spark_ansi_literals(text))

@@ -29,12 +29,16 @@ from __future__ import annotations
 import json
 import logging
 import math
+import re
 from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark.sql import DataFrame
 
 logger = logging.getLogger(__name__)
+
+#: the stage id Spark appends to a WholeStageCodegen node's name
+_CODEGEN_ID = re.compile(r"^(WholeStageCodegen) \(\d+\)$")
 
 
 @dataclass
@@ -92,11 +96,14 @@ class PlanNode:
 
     def canonical(self) -> str:
         """Order-insensitive structural form for plan comparison (ref
-        ``canonical()`` ``_qep.py:1793``)."""
+        ``canonical()`` ``_qep.py:1793``). Whole-stage-codegen ids
+        (``WholeStageCodegen (14)``) are dropped: they number stages in
+        the order AQE materializes them, which varies from run to run."""
+        name = _CODEGEN_ID.sub(r"\1", self.name)
         if not self.children:
-            return self.name
+            return name
         inner = ",".join(sorted(c.canonical() for c in self.children))
-        return f"{self.name}({inner})"
+        return f"{name}({inner})"
 
     def pretty(self, indent: int = 0) -> str:
         est = "" if math.isnan(self.estimated_rows) else f" est={self.estimated_rows:.0f}"

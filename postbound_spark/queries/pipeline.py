@@ -119,6 +119,28 @@ def spread_stream_side(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
+def bounded_sort(df: DataFrame, *keys) -> DataFrame:
+    """A query's final ordering, sorted inside ONE partition instead of
+    through a range exchange.
+
+    Use it only for the last ``ORDER BY`` of a result whose row count has
+    a bound that does not grow with the fact tables (a fixed domain such
+    as nations or flag × status, or a dimension key such as the supplier);
+    every call site names that bound in a comment. A result without such
+    a bound keeps ``orderBy``.
+
+    An unlimited ``orderBy`` plans a range exchange: a sampling job that
+    computes the whole input once more, a second shuffle, and one more
+    AQE stage round. ``coalesce(1)`` is a narrow dependency, so it runs
+    the whole stage that feeds it, everything above the last shuffle, in
+    one task: the bound must cover that stage's input, not only the
+    result. Over an aggregate that stage is the post-shuffle final
+    aggregate, whose input the group bound keeps small at any scale.
+    ``collect()`` concatenates partitions in order, so one sorted
+    partition returns the rows in the order ``orderBy`` would."""
+    return df.coalesce(1).sortWithinPartitions(*keys)
+
+
 def release_stage_caches() -> int:
     """Unpersist every registered stage cache (non-blocking), drop the
     stage frames, and return how many caches were released. The registry
@@ -2399,10 +2421,13 @@ def mm_video_decode(spark, sf_dir):
     all surface as value mismatches, not just row counts. Pillow-free
     by construction.
 
-    Scale shape: two chained mapInPandas stages (encode, decode), both
-    map-only over Arrow batches — no shuffle anywhere; the frame digest
+    Scale shape: two chained mapInPandas UDFs (encode, decode), both
+    map-only over Arrow batches, and no shuffle: the frame digest
     aggregate happens inside the decode batch loop, bounded by frames
-    per batch. Production swaps the PNG codec for an ffmpeg batch call
+    per batch, and the final ordering is a :func:`bounded_sort` in one
+    partition, so the UDF chain runs once per collect. (A range-exchange
+    ``orderBy`` ran the chain twice: once for its sampling job, once for
+    the shuffle.) Production swaps the PNG codec for an ffmpeg batch call
     with the identical dataflow and oracle discipline (digests of
     decoded pixels, engine-independent).
     """
@@ -2465,8 +2490,10 @@ def mm_video_decode(spark, sf_dir):
             )
 
     videos = docs.mapInPandas(build_containers, schema=container_schema)
-    return decode_video_frames(videos, stride=2).orderBy(
-        "doc_id", "frame_idx"
+    # bound: doc_id < 200, at most 3 frames per document, every 2nd decoded
+    # -> at most 400 rows at any scale
+    return bounded_sort(
+        decode_video_frames(videos, stride=2), "doc_id", "frame_idx"
     )
 
 

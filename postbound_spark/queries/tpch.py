@@ -27,7 +27,7 @@ from postbound_spark.optimizer.selection import (
 )
 from postbound_spark.plans import relalg as ra
 from postbound_spark.queries import query
-from postbound_spark.queries.pipeline import stage_cache
+from postbound_spark.queries.pipeline import bounded_sort, stage_cache
 
 
 def _sized(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -167,7 +167,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        # bound: return flag x line status, 3 x 2 groups at any scale
+        .transform(bounded_sort, "l_returnflag", "l_linestatus")
     )
 
 
@@ -356,7 +357,8 @@ def top_suppliers_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("_raw") > 100000 * 1000000)
         .drop("_raw")
-        .orderBy(F.col("total_revenue").desc(), "s_suppkey")
+        # bound: one row per supplier, a dimension (SF x 10k rows)
+        .transform(bounded_sort, F.col("total_revenue").desc(), "s_suppkey")
     )
 
 
@@ -433,7 +435,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         matched.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
+        # bound: the 5 order priorities
+        .transform(bounded_sort, "o_orderpriority")
     )
 
 
@@ -508,7 +511,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"), "n_name")
+        # bound: the nations of one region, at most 25 rows
+        .transform(bounded_sort, F.desc("revenue"), "n_name")
     )
 
 
@@ -567,7 +571,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        # bound: 2 nation pairs x ship years (a calendar domain)
+        .transform(bounded_sort, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -882,7 +887,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
+        # bound: the order years of the 1996-1997 window, 2 rows
+        .transform(bounded_sort, "o_year")
     )
 
 
@@ -932,7 +938,8 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("nation", "o_year")
         .agg(F.round(F.sum("amount").cast("double"), 2).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
+        # bound: 25 nations x order years (a calendar domain)
+        .transform(bounded_sort, "nation", F.desc("o_year"))
     )
 
 
@@ -975,7 +982,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value")
         )
         # r12-opt: consumed twice (rows + grand-total threshold) with no
-        # exchange/stage reuse firing (see q15) — persist the part-bounded
+        # exchange/stage reuse firing — persist the part-bounded
         # aggregate so the fact semi-join+agg runs once; stage-cache
         # lifecycle releases it per query.
         .transform(stage_cache)
@@ -1033,7 +1040,8 @@ def q12_shipping_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        # bound: the 2 line statuses
+        .transform(bounded_sort, "l_linestatus")
     )
 
 
@@ -1071,7 +1079,9 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c_orders.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
+        # bound: the distinct per-customer order counts; orders per
+        # customer is a fixed ratio (10 on average), not a scale factor
+        .transform(bounded_sort, F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -1094,10 +1104,18 @@ ORDER BY s.s_suppkey
 @query("q15_top_supplier", oracle=_Q15_ORACLE)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: supplier(s) with the maximum quarterly revenue — a view
-    (CTE) consumed twice: once for rows, once for MAX. Revenue sums are
-    decimal, so the = MAX equality is exact (double sums would make "the
-    max row" engine-dependent at the last ulp). The MAX joins back as a
-    broadcast scalar."""
+    (CTE) consumed twice: once for rows, once for MAX. Both uses read one
+    pass: ``max(total_revenue) OVER ()`` stamps the maximum on every row
+    of the supplier-keyed revenue aggregate, and a filter keeps the rows
+    that equal it, so the lineitem scan runs once without a persist or a
+    join back. The empty window gathers the aggregate into one partition,
+    which its supplier key bounds, so the final ``orderBy`` finds its
+    input in one partition and plans no range exchange. Revenue sums are
+    decimal, so the
+    = MAX equality is exact (double sums would make "the max row"
+    engine-dependent at the last ulp)."""
+    from pyspark.sql.window import Window
+
     t = load_tables(spark, sf_dir, ["supplier", "lineitem"])
     revenue = (
         t["lineitem"]
@@ -1110,21 +1128,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)"))
             .alias("total_revenue")
         )
-        # r12-opt: the view is consumed twice (rows + MAX) and neither
-        # ReuseExchange nor AQE stage reuse deduplicates the two aggregate
-        # subtrees (executed plan showed the lineitem scan running twice;
-        # x10 exponent 1.08, the family's worst). Persisting the
-        # supplier-bounded aggregate behind the registered stage-cache
-        # lifecycle makes the fact scan run ONCE at any scale; released
-        # per query like every pipeline stage cache.
-        .transform(stage_cache)
     )
-    best = revenue.agg(F.max("total_revenue").alias("max_revenue"))
+    top = revenue.withColumn(
+        "max_revenue", F.max("total_revenue").over(Window.partitionBy())
+    ).filter(F.col("total_revenue") == F.col("max_revenue"))
     return (
         t["supplier"]
-        .join(revenue, F.col("s_suppkey") == F.col("supplier_no"))
-        .join(F.broadcast(best))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
+        .join(top, F.col("s_suppkey") == F.col("supplier_no"))
         .select(
             "s_suppkey", "s_name",
             F.round(F.col("total_revenue").cast("double"), 2).alias("total_revenue"),
@@ -1166,7 +1176,10 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(_sized(spark, bad_sup), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        # bound: brand x type x the 5 listed sizes
+        .transform(
+            bounded_sort, F.desc("supplier_cnt"), "p_brand", "p_type", "p_size"
+        )
     )
 
 
@@ -1216,7 +1229,11 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(qualifying, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", "n_name")
-        .orderBy("s_name")
+        # bound: at most one row per supplier, a dimension (SF x 10k rows);
+        # the narrowed stage is the supplier scan probing the broadcast
+        # semi-join build (a shuffled semi join would also put its
+        # reduce side in that one task)
+        .transform(bounded_sort, "s_name")
     )
 
 
@@ -1293,7 +1310,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(_sized(spark, t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.sum("late_cnt").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
+        # bound: one row per supplier name, a dimension (SF x 10k rows)
+        .transform(bounded_sort, F.desc("numwait"), "s_name")
     )
 
 
@@ -1357,5 +1375,6 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double"), 2
             ).alias("totacctbal"),
         )
-        .orderBy("cntrycode")
+        # bound: the 7 listed country codes
+        .transform(bounded_sort, "cntrycode")
     )

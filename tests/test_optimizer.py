@@ -1027,6 +1027,29 @@ def test_malformed_plan_node_degrades_loudly(caplog):
     assert "metrics unreadable" in messages
 
 
+def test_canonical_plan_ignores_codegen_stage_ids():
+    """Whole-stage-codegen ids number stages in the order AQE materializes
+    them, so one plan carries different ids from run to run; the canonical
+    form (the ``query_plan`` training feature) must not, while a different
+    operator still changes it."""
+    from postbound_spark.optimizer.qep import PlanNode
+
+    def plan(left_id: int, right_id: int, join: str = "SortMergeJoin") -> PlanNode:
+        def side(stage: int, table: str) -> PlanNode:
+            scan = PlanNode("Scan parquet ", table=table)
+            return PlanNode(f"WholeStageCodegen ({stage})", [PlanNode("Filter", [scan])])
+
+        return PlanNode(
+            f"WholeStageCodegen ({left_id + right_id})",
+            [PlanNode(join, [side(left_id, "a"), PlanNode("Sort", [side(right_id, "b")])])],
+        )
+
+    assert plan(3, 14).canonical() == plan(14, 3).canonical() == plan(1, 2).canonical()
+    assert "(3)" not in plan(3, 14).canonical()
+    assert plan(3, 14).canonical() != plan(3, 14, join="ShuffledHashJoin").canonical()
+    assert PlanNode("Filter").canonical() != PlanNode("Project").canonical()
+
+
 def test_precise_cardinalities_identity_checked_not_pinned(spec, tdfs):
     """The memo must neither pin frames (unbounded growth across a long
     session) nor trust a recycled id: entries hold weakrefs and every hit

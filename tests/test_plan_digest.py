@@ -14,7 +14,8 @@ plan reader consumes it. This module pins three things:
 2. scan tables resolve from the relation, so a data path long enough for
    Spark to truncate the scan's one-line description still names them;
 3. a warm ``run_optimizer_loop`` op stays within a py4j round-trip budget,
-   so per-node chatter cannot creep back.
+   so per-node chatter cannot creep back, and recompiling a plan parses
+   no expression text on the JVM again.
 
 Re-record the literals (only for an intended change of the readers) with
 ``python -m tests.test_plan_digest --record`` from the repository root.
@@ -195,6 +196,33 @@ def test_warm_loop_op_py4j_budget(imdb_engines, monkeypatch):
     monkeypatch.undo()
     assert list(frame.strategy) == list(strategies)
     assert 0 < len(calls) <= 1500, len(calls)
+
+
+def test_recompile_reuses_parsed_expressions(imdb_engines, monkeypatch):
+    """Compiling the same JOB plan again parses no IR expression text on
+    the JVM: ``_expr`` is memoized on its text, and the recompiled frame
+    has the same semantics as the first."""
+    from py4j.clientserver import ClientServerConnection
+
+    spark, _con = imdb_engines
+    base = {t: spark.table(t) for t in IMDB_TABLES}
+    tree = parse_relalg(parse_query(_job_sql("20b")))
+    first = compile_plan(tree, spark, catalog=dict(base))
+
+    expr_calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if "\nexpr\n" in command:
+            expr_calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    second = compile_plan(tree, spark, catalog=dict(base))
+    monkeypatch.undo()
+    assert expr_calls == []
+    assert second.schema == first.schema
+    assert second.sameSemantics(first)
 
 
 if __name__ == "__main__":

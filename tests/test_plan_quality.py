@@ -1555,17 +1555,17 @@ def test_stage_frame_memoizes_until_release(spark, sf_small):
     # keeps its stage caches and frames warm, building another query
     # releases them
     reg = load_all()
-    reg["q15_top_supplier"].builder(spark, sf_small)
-    q15_caches = list(P._STAGE_CACHES)
-    assert q15_caches and all(df.is_cached for df in q15_caches)
+    reg["dedup_ngram_jaccard"].builder(spark, sf_small)
+    first_caches = list(P._STAGE_CACHES)
+    assert first_caches and all(df.is_cached for df in first_caches)
     P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
     n = len(calls)
-    reg["q15_top_supplier"].builder(spark, sf_small)
+    reg["dedup_ngram_jaccard"].builder(spark, sf_small)
     P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
-    assert all(df.is_cached for df in q15_caches) and len(calls) == n
+    assert all(df.is_cached for df in first_caches) and len(calls) == n
     reg["q11_important_stock"].builder(spark, sf_small)
-    assert not any(df.is_cached for df in q15_caches)
-    assert not any(df is c for df in P._STAGE_CACHES for c in q15_caches)
+    assert not any(df.is_cached for df in first_caches)
+    assert not any(df is c for df in P._STAGE_CACHES for c in first_caches)
     P.stage_frame(spark, "t_frame", "/tmp/sfX", build)
     assert len(calls) == n + 1
     P.release_stage_caches()
@@ -1591,17 +1591,85 @@ def test_q15_q11_twice_consumed_aggregate_is_persisted(spark, sf_small):
     """q15's revenue view feeds both the row side and the MAX subquery,
     q11's part-value aggregate feeds both the row side and the 0.005
     grand-total threshold; neither ReuseExchange nor AQE stage reuse
-    deduplicated the two aggregate subtrees, so the lineitem / partsupp
-    fact scan ran TWICE per collect. The stage-cache persist makes the
-    shared aggregate an InMemoryRelation consumed by both sides, and the
-    release lifecycle must drop it between queries."""
+    deduplicates two copies of an aggregate subtree, so a plan that reads
+    the view twice scans the lineitem fact table twice per collect.
+
+    q15 takes its MAX over an empty window on the one aggregate: one
+    lineitem scan and nothing to persist. q11 persists its aggregate
+    through the stage cache, so it becomes an InMemoryRelation consumed
+    by both sides, and the release lifecycle must drop it between
+    queries."""
+    from postbound_spark.optimizer.qep import executed_plan
     from postbound_spark.queries import load_all
     from postbound_spark.queries.pipeline import release_stage_caches
 
     reg = load_all()
-    for name in ("q15_top_supplier", "q11_important_stock"):
-        df = reg[name].builder(spark, sf_small)
-        plan = str(df._jdf.queryExecution().optimizedPlan())
-        assert "InMemoryRelation" in plan, name
-        df.collect()
-        assert release_stage_caches() >= 1, name
+    df = reg["q15_top_supplier"].builder(spark, sf_small)
+    assert "InMemoryRelation" not in str(df._jdf.queryExecution().optimizedPlan())
+    df.collect()
+    scans = [n for n in executed_plan(df).find_all("scan") if n.table == "lineitem"]
+    assert len(scans) == 1, executed_plan(df).pretty()
+
+    df = reg["q11_important_stock"].builder(spark, sf_small)
+    plan = str(df._jdf.queryExecution().optimizedPlan())
+    assert "InMemoryRelation" in plan
+    df.collect()
+    assert release_stage_caches() >= 1
+
+
+#: every registry builder whose final ordering is a ``bounded_sort``, with
+#: a row key that orders its collected rows the way the helper's keys do
+BOUNDED_SORTS = {
+    "q1_pricing_summary": lambda r: (r.l_returnflag, r.l_linestatus),
+    "q4_order_priority": lambda r: r.o_orderpriority,
+    "q5_local_supplier_volume": lambda r: (-r.revenue, r.n_name),
+    "q7_volume_shipping": lambda r: (r.supp_nation, r.cust_nation, r.l_year),
+    "q8_market_share": lambda r: r.o_year,
+    "q9_product_type_profit": lambda r: (r.nation, -r.o_year),
+    "q12_shipping_priority_split": lambda r: r.l_linestatus,
+    "q13_customer_distribution": lambda r: (-r.custdist, -r.c_count),
+    "q16_supplier_part_counts": lambda r: (-r.supplier_cnt, r.p_brand, r.p_type, r.p_size),
+    "q20_potential_promotion": lambda r: r.s_name,
+    "q21_waiting_suppliers": lambda r: (-r.numwait, r.s_name),
+    "q22_global_sales_opportunity": lambda r: r.cntrycode,
+    "top_suppliers_having": lambda r: (-r.total_revenue, r.s_suppkey),
+    "mm_video_decode": lambda r: (r.doc_id, r.frame_idx),
+}
+
+
+@pytest.mark.parametrize("name", sorted(BOUNDED_SORTS))
+def test_bounded_final_sort_has_no_range_exchange(registry, spark, sf_small, name):
+    """A final ordering over a bounded result sorts inside one partition:
+    no range exchange (and so no sampling job) in the executed plan, and
+    the collected rows still arrive in the helper's key order."""
+    df = _build(registry, spark, sf_small, name)
+    rows = df.collect()
+    assert rows, name
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning(" not in plan, plan
+    key = BOUNDED_SORTS[name]
+    assert [key(r) for r in rows] == sorted(key(r) for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name, allowed",
+    [
+        ("q1_pricing_summary", range(1, 3)),
+        ("q15_top_supplier", range(1, 5)),
+        ("mm_video_decode", range(1, 2)),
+    ],
+)
+def test_warm_collect_job_counts(registry, spark, sf_small, name, allowed):
+    """Spark jobs per warm collect, by scheduler job-id delta. q1 and
+    mm_video_decode lost the range sort's sampling job and shuffle; q15
+    lost its persist and the broadcast MAX. mm_video_decode is a single
+    map-only job, so its pandas UDF chain runs once."""
+    def next_job_id() -> int:
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    _build(registry, spark, sf_small, name).collect()
+    df = _build(registry, spark, sf_small, name)
+    j0 = next_job_id()
+    df.collect()
+    jobs = next_job_id() - j0
+    assert jobs in allowed, jobs
